@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). Timing forces full
   * materialization through the noop sink (no count() shortcuts, no
@@ -11,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Run.cpus
     // Ladder-only scaling knob (round-11 verdict task 3): the driver
     // contract pins shuffle partitions to the core count, which at
     // rung 2 (sf10, ~1.7 GB parquet / ~60 M lineitem rows) makes
@@ -22,52 +20,19 @@ object Bench {
     // parquet per shuffle partition (≈128 MB in-flight once ~4×
     // parquet compression and ~4× row-object expansion are paid —
     // the cluster-default sizing rule applied to what actually fills
-    // memory), never below the core count. SPARK_GRAFT_SHUFFLE_
-    // PARTITIONS=N overrides with an explicit count for isolation
-    // experiments. The driver's contract run sets neither, so sf0.1
-    // numbers stay comparable across rounds.
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .getOrElse {
-        if (sys.env.get("SPARK_GRAFT_SCALE_PARTITIONS").contains("1")) {
-          // listFiles() is null for an unreadable or race-deleted dir
-          def dirBytes(p: java.io.File): Long =
-            if (p.isDirectory)
-              Option(p.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
-            else p.length()
-          val bytes = dirBytes(new java.io.File(sfDir))
-          math.max(cpus.toInt, (bytes / (8L << 20)).toInt + 1).toString
-        } else cpus
-      }
-    // Round-17 planner-policy experiment knobs, BOTH defaulting to the
-    // Spark defaults so the driver's contract run (which sets neither)
-    // measures the same session as every prior round:
-    //  - SPARK_GRAFT_PREFER_SMJ=0 sets preferSortMergeJoin=false (the
-    //    guide §9 baseline — planner may pick shuffled-hash from size
-    //    ESTIMATES when its conditions hold).
-    //  - SPARK_GRAFT_SHJ_LOCALMAP=<bytes|0> sets AQE's
-    //    maxShuffledHashJoinLocalMapThreshold — the RUNTIME SMJ→SHJ
-    //    rewrite, gated on actual per-partition sizes, which degrades
-    //    gracefully at scale (partitions outgrow the bound ⇒ rewrite
-    //    stops firing, SMJ stays).
-    val preferSmj = sys.env.get("SPARK_GRAFT_PREFER_SMJ") match {
-      case Some("0") | Some("false") => "false"
-      case Some("1") | Some("true") | None => "true"
-      case Some(other) => sys.error(
-        s"SPARK_GRAFT_PREFER_SMJ must be 0/false or 1/true, got '$other'" +
-          " — refusing to silently measure the default arm")
-    }
-    val shjLocalMap = sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shjLocalMap)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    // memory), never below the core count. The driver's contract run
+    // does not set it, so sf0.1 numbers stay comparable across rounds.
+    val shufflePartitions =
+      if (sys.env.get("SPARK_GRAFT_SCALE_PARTITIONS").contains("1")) {
+        // listFiles() is null for an unreadable or race-deleted dir
+        def dirBytes(p: java.io.File): Long =
+          if (p.isDirectory)
+            Option(p.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
+          else p.length()
+        val bytes = dirBytes(new java.io.File(sfDir))
+        math.max(cpus, (bytes / (8L << 20)).toInt + 1)
+      } else cpus
+    val spark = Run.session(cpus, shufflePartitions)
 
     // Sink/roundtrip scratch → tmpfs ONLY on explicit opt-in
     // (SPARK_GRAFT_TMPFS_SCRATCH=1): this VM's disk has a burst-bucket
@@ -102,35 +67,17 @@ object Bench {
       case None => "disk"
     }
 
-    def exec(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
+    def exec(name: String, dir: String): Option[Double] =
+      Run.exec(spark, name, dir)(Run.noop) match {
+        case Right(dt) =>
+          System.err.println(f"[bench] $name%-28s $dt%8.2fs  ($dir)")
+          Some(dt)
+        case Left(f) =>
+          System.err.println(s"[bench] ${f.message}")
+          None
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name%-28s $dt%8.2fs  ($dir)")
-      // queries persist() intermediates consumed by multiple actions;
-      // drop them between queries (outside the timed region) so cache
-      // and GC pressure don't accumulate across the ~100-query run and
-      // bleed into later queries' numbers. The streaming queries'
-      // memory-sink tables (graft_stream_*) are consumed by now too —
-      // clearCache() doesn't cover temp views, so drop them explicitly
-      // (each helper recreates its own on the next run).
-      spark.catalog.clearCache()
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      dt
-    }
 
-    // Local profiling aid: SPARK_GRAFT_ONLY=q71,q42 limits the run to a
-    // comma-separated prefix-matched subset. Unset (the driver's case)
-    // = every declared query, unchanged contract.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
+    val names = Run.selected()
     // SPARK_GRAFT_ONESHOT=1: skip warm-up and the stall re-measure
     // loop — one timed pass per query. For scale-ladder profiling
     // (tools/gen_scale_ladder.py) where each query is minutes, not
@@ -153,7 +100,9 @@ object Bench {
     // 1.3x) is confirmed genuine and never re-taken again — otherwise
     // every legitimately-slow query (file sinks, streaming) would be
     // re-run in all 3 rounds and get min-of-4 reporting while fast
-    // queries get a single sample, a selective-minimum bias.
+    // queries get a single sample, a selective-minimum bias. A query
+    // that fails on a re-take is reported failed, never left at its
+    // earlier time.
     val best = scala.collection.mutable.LinkedHashMap(firstPass: _*)
     val confirmed = scala.collection.mutable.Set[String]()
     // Threshold 4 s (was 8): a clean isolated run shows every
@@ -161,60 +110,72 @@ object Bench {
     // either genuinely heavy (confirmed once, never re-taken again)
     // or a stall window; at ~10 candidates the re-measure pass costs
     // well under a minute.
+    def suspect(n: String): Boolean = best(n).exists(_ > 4.0) && !confirmed(n)
     var round = 0
-    while (!oneshot && round < 3 && names.exists(n => best(n) > 4.0 && !confirmed(n))) {
-      for (n <- names if best(n) > 4.0 && !confirmed(n)) {
-        System.err.println(s"[bench] $n: ${best(n)} s looks stall-contaminated; re-measuring")
+    while (!oneshot && round < 3 && names.exists(suspect)) {
+      for (n <- names if suspect(n); prev <- best(n)) {
+        System.err.println(s"[bench] $n: $prev s looks stall-contaminated; re-measuring")
         val t2 = exec(n, sfDir)
-        if (t2 >= 0) {
-          val lo = math.min(t2, best(n))
-          if (math.max(t2, best(n)) <= lo * 1.3) confirmed += n
-          best(n) = lo
+        t2.foreach { t =>
+          if (math.max(t, prev) <= math.min(t, prev) * 1.3) confirmed += n
         }
+        best(n) = t2.map(math.min(_, prev))
       }
       round += 1
     }
-    val results = best.toSeq
-    // The driver records only the trailing ~2000 chars of the run's
-    // output; with 131 full-length query names the JSON line is ~4.6 KB
-    // and its head gets cut, so the structured record never parses
-    // ("parsed": null in every round's BENCH artifact). Emit the
-    // contract line with the unique qNNN prefix as the key and
-    // centisecond precision — ~1.7 KB, fits the window whole. The
-    // full-name, full-precision numbers are already on stderr (one
-    // [bench] line per query) for local profiling.
+    println(contractLine(best.toSeq, scratchRegime, sfDir))
+    spark.stop()
+  }
+
+  /** The driver's contract line for per-query results (None = the
+    * query failed).
+    *
+    * The driver records only the trailing ~2000 chars of the run's
+    * output; with 131 full-length query names the JSON line is ~4.6 KB
+    * and its head gets cut, so the structured record never parses
+    * ("parsed": null in every round's BENCH artifact). The line keys
+    * each query by its unique qNNN prefix with centisecond precision.
+    * The full-name, full-precision numbers are already on stderr (one
+    * [bench] line per query) for local profiling.
+    *
+    * If the full line exceeds `budget`, it keeps the CONTRACT SHAPE
+    * (qNN keys, seconds values) but lists only the slowest entries —
+    * the informative ones — and summarizes the omitted fast tail in a
+    * self-describing "omitted" object, shrinking the list until the
+    * line fits. Every emitted number stays in seconds.
+    *
+    * "value" (the total) sums the queries that finished; every query
+    * that failed is named in "failed", whatever the budget, and is
+    * never folded into "omitted" — a failure must not pass for a fast
+    * query.
+    */
+  def contractLine(results: Seq[(String, Option[Double])], scratch: String,
+      sfDir: String, budget: Int = 1900): String = {
     // Locale.ROOT: the f-interpolator uses the JVM default locale, and
     // a comma-decimal locale (de_DE, fr_FR, …) would emit 1,23 —
     // invalid JSON, the exact parse failure this line exists to fix.
     def cs(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", v)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // The query count grows every round, so the full seconds map will
-    // eventually outgrow the window again (at 161 queries it is
-    // ~1.92 KB — already at the edge). If the full line exceeds the
-    // safe budget, keep the CONTRACT SHAPE (qNN keys, seconds values)
-    // but list only the slowest entries — the informative ones — and
-    // summarize the omitted fast tail in a self-describing "omitted"
-    // object, shrinking the list until the line fits. Every emitted
-    // number stays in seconds; nothing needs re-unit-ing downstream.
-    def entry(k: String, v: Double): String =
-      "\"" + k.takeWhile(_ != '_') + "\":" + cs(v)
+    def key(k: String): String = "\"" + k.takeWhile(_ != '_') + "\""
+    val timed = results.collect { case (k, Some(v)) => (k, v) }
+    val failed = results.collect { case (k, None) => key(k) }.mkString("[", ",", "]")
+    val total = timed.map(_._2).sum
     def line(qs: Seq[(String, Double)], extra: String): String =
       s"""{"metric":"total","value":${cs(total)},"unit":"sec","queries":${
-        qs.map((entry _).tupled).mkString("{", ",", "}")
-      },$extra"scratch":"$scratchRegime","sf":"$sfDir"}"""
-    val budget = 1900
-    val full = line(results, "")
-    val out = if (full.length <= budget) full else {
-      val bySlow = results.sortBy { case (_, v) => -v }
-      Iterator.from(0).map { shrink =>
-        val keep = bySlow.take(math.max(10, bySlow.size - 20 * (shrink + 1)))
-        val rest = results.filterNot(keep.contains(_))
-        val restSum = rest.map(_._2).filter(_ >= 0).sum
+        qs.map { case (k, v) => key(k) + ":" + cs(v) }.mkString("{", ",", "}")
+      },"failed":$failed,$extra"scratch":"$scratch","sf":"$sfDir"}"""
+    val full = line(timed, "")
+    if (full.length <= budget) full else {
+      val bySlow = timed.sortBy { case (_, v) => -v }
+      // keep shrinks by 20 down to 10 entries, then to none; a failed
+      // list too long for the budget is still printed whole
+      val keeps = (bySlow.size - 20 to 10 by -20) ++ Seq(10, 0)
+      val lines = keeps.map { n =>
+        val keep = bySlow.take(n)
+        val rest = timed.filterNot(keep.contains(_))
         line(keep.sortBy(_._1),
-          s""""omitted":{"n":${rest.size},"sum_sec":${cs(restSum)}},""")
-      }.find(_.length <= budget).get
+          s""""omitted":{"n":${rest.size},"sum_sec":${cs(rest.map(_._2).sum)}},""")
+      }
+      lines.find(_.length <= budget).getOrElse(lines.last)
     }
-    println(out)
-    spark.stop()
   }
 }

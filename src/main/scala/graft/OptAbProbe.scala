@@ -1,908 +1,67 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Round-16 optimization A/B instrument: times OLD-vs-NEW plan arms
-  * ALTERNATING inside ONE JVM (A B A B ...), so the box's documented
-  * multi-minute stall windows hit both arms alike and the min-of-N
-  * per arm is a same-regime comparison — cross-JVM min-of-2 was
-  * swinging 4x on this machine the night the rewrites landed. Each
-  * timed cell materializes through the noop sink and clears the cache
-  * after (the Bench discipline). One JSON line per arm pair.
+/** Planner-policy A/B instrument: times registry queries with and
+  * without a set of session confs, ALTERNATING inside ONE JVM (A B A B
+  * ...), so the box's documented multi-minute stall windows hit both
+  * arms alike and the min-of-N per arm is a same-regime comparison —
+  * cross-JVM min-of-2 swung 4x on this machine. Each timed cell runs
+  * through `Run.exec` (noop sink, reset after). One JSON line per
+  * query.
   *
-  * Arms (SPARK_GRAFT_AB, comma list; default "edges,q185" — the other
-  * arms are opt-in):
-  *  - edges: symmetric coPurchaseEdges+orientEdges (old) vs canonical
-  *    coPurchaseEdgesCanon+orientEdgesFromCanon (new, q173/q278/q280/
-  *    q281's shipped build)
-  *  - orient: orientation step alone over pinned symmetric vs
-  *    canonical inputs
-  *  - wedge: the exact-leg wedge count, SMJ vs SHUFFLE_HASH joins
-  *  - q158: PageRank iteration join, SMJ (shipped) vs SHUFFLE_HASH
-  *    (measured wash, r16 §4)
-  *  - q280: full-orientation cache kept (old) vs dropped (shipped)
-  *  - replay: sentinelReplay coalesce(1) (shipped) vs parallel write
-  *  - drain: drained-replay state partitions 2 (shipped) vs 1
-  *  - sym: Components symmetrize, union-of-two-selects (old, runs the
-  *    edge lineage twice) vs 2-element explode (shipped, round 17)
-  *  - q185: the old distinct+double-explode item-similarity plan vs
-  *    the shipped canonical-pair plan
-  *  - kcore: q271 union-mirrored edges + round-1 identity joins (old)
-  *    vs explode mirror + direct round-1 degree agg (shipped, r17)
-  *  - stage: sentinelReplay staging — separate max(ets) scan + write
-  *    (old) vs observed-metric single pass (shipped, round 17)
-  *  - lm: bigramLmScore (q135/q148) — bi⋈c2⋈c1 two-join chain (old)
-  *    vs pair-table term join (shipped, round 17)
-  *  - lm2: bigramLmScore again — c1 aggregated from the bigram
-  *    occurrence mass (old, the mid-round-17 shape) vs c1 derived
-  *    from c2 (shipped, round-17 third session)
-  *  - novelty: q151 — dg⋈owner join-back (old) vs owner-table agg
-  *    (shipped, round 17)
-  *  - overlap: q128 — distinct + gram self-join (old) vs collect_set
-  *    + in-array pair expansion (shipped, round 17)
-  *  - span: q92 spanDedup — spans⋈counts join-back (old) vs
-  *    unique-group attribution via min(id) (shipped, round 17)
-  *  - rep: q75 — top word via window + join (old) vs min_by in the
-  *    totals agg (shipped, round 17)
-  *  - rank1: q175 + q60 + q17 summed — rank-1 row_number windows
-  *    (old) vs min_by aggs (shipped, round 17)
-  *  - compose: q244 (join-back old vs SHIPPED min_by attributes) and
-  *    q261 (SHIPPED join-back vs the rejected min_by-text variant)
-  *  - para: q143 — ch⋈docCounts join-back (old, SHIPPED) vs two-level
-  *    agg with min(doc_id) attribution (new, measured a consistent
-  *    local loss in round 17 and rejected)
-  *  - gapfill: q168 — grid⋈ob left join (old) vs union + (user, hr)
-  *    agg (shipped, round 17)
-  *  - conf: generic planner-policy A/B — run the queries named in
-  *    SPARK_GRAFT_AB_QUERY (comma list of registry keys) with the
-  *    session confs in SPARK_GRAFT_AB_CONF ("k=v;k=v", default
-  *    preferSortMergeJoin=false) applied on the NEW arm only, both
-  *    arms alternating in one JVM. Works because the join-policy confs
-  *    are runtime-settable SQLConf entries.
+  * Inputs:
+  *  - SPARK_GRAFT_AB_QUERY: comma list of registry keys (default
+  *    q271_kcore);
+  *  - SPARK_GRAFT_AB_CONF: "k=v;k=v" session confs applied on the NEW
+  *    arm only (default spark.sql.join.preferSortMergeJoin=false).
+  *    Works for any runtime-settable SQLConf entry — join policy,
+  *    AQE thresholds, the streaming state-store provider;
+  *  - SPARK_GRAFT_AB_REPS: alternating pairs per query (default 3);
+  *  - SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as for Bench.
+  *
+  * The plan-shape A/Bs of rounds 16 and 17 (old vs shipped query
+  * code) are recorded in OPTIMIZATION_r16.md and OPTIMIZATION_r17.md.
   */
 object OptAbProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "3").toInt
-    val arms = sys.env.getOrElse("SPARK_GRAFT_AB", "edges,q185")
-      .split(",").map(_.trim).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val qNames = sys.env.getOrElse("SPARK_GRAFT_AB_QUERY", "q271_kcore")
+      .split(",").map(_.trim).filter(_.nonEmpty)
+    val confKv = sys.env.getOrElse("SPARK_GRAFT_AB_CONF",
+        "spark.sql.join.preferSortMergeJoin=false")
+      .split(";").map(_.trim).filter(_.nonEmpty)
+      .map { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => (k, v)
+          case _ => sys.error(s"SPARK_GRAFT_AB_CONF entry '$kv' is not key=value")
+        }
+      }
+    qNames.find(!SparkEntry.queries.contains(_))
+      .foreach(qn => sys.error(s"unknown query key: $qn"))
+    val spark = Run.session(Run.cpus, Run.cpus)
 
-    def timed(f: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      dt
+    // OLD = the session defaults (the shipped, driver-comparable
+    // policy), NEW = the same query with the confs applied for that
+    // cell only. Conf values are restored after every cell so arms
+    // never contaminate each other.
+    def cell(qn: String, applyConf: Boolean): Double = {
+      val saved = confKv.map { case (k, _) => (k, spark.conf.getOption(k)) }
+      if (applyConf) confKv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try Run.exec(spark, qn, sfDir)(Run.noop).fold(f => sys.error(f.message), identity)
+      finally saved.foreach { case (k, ov) =>
+        ov.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
     }
-    def report(name: String, old: Seq[Double], nw: Seq[Double]): Unit = {
-      def s(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      System.err.println(s"[ab] $name old=${old.map(s).mkString(",")} " +
+    def s(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    for (qn <- qNames) {
+      cell(qn, applyConf = true) // codegen/JIT lead, charged to neither arm
+      val pairs = (1 to reps).map(_ => (cell(qn, false), cell(qn, true)))
+      val (old, nw) = pairs.unzip
+      System.err.println(s"[ab] conf_$qn old=${old.map(s).mkString(",")} " +
         s"new=${nw.map(s).mkString(",")}")
-      println(s"""{"metric":"ab_$name","old_min":${s(old.min)},""" +
+      println(s"""{"metric":"ab_conf_$qn","old_min":${s(old.min)},""" +
         s""""new_min":${s(nw.min)},"reps":$reps,"sf":"$sfDir"}""")
     }
-
-    import queries.AnalyticsQueries11._
-    if (arms("build")) {
-      def oldArm = coPurchaseEdges(spark, sfDir)
-      def newArm = coPurchaseEdgesCanon(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("build", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("orient")) {
-      val sym = coPurchaseEdges(spark, sfDir).persist(); sym.count()
-      val canon = coPurchaseEdgesCanon(spark, sfDir).persist(); canon.count()
-      def oldArm = orientEdges(sym)
-      def newArm = orientEdgesFromCanon(canon)
-      // timed() clearCache would drop the pins — keep them for this arm
-      def timedK(f: => DataFrame): Double = {
-        val t = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t) / 1e9
-      }
-      timedK(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timedK(oldArm), timedK(newArm)))
-      report("orient", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-      sym.unpersist(); canon.unpersist()
-    }
-    if (arms("wedge")) {
-      // the exact-leg wedge count over the FULL oriented graph (q173/
-      // q278's dominant cost): SMJ (shipped) vs SHUFFLE_HASH-hinted
-      // joins — SHJ skips the sort of the wedge mass on the closure
-      // join's streamed side and of both op sides on the self-join
-      val canon = coPurchaseEdgesCanon(spark, sfDir).persist()
-      val op = orientEdgesFromCanon(canon).persist(); op.count()
-      canon.unpersist()
-      def oldArm = wedgeCountFromOp(op, "t")
-      def newArm = {
-        val wedges = op.as("a")
-          .join(op.as("b").hint("shuffle_hash"), col("a.u") === col("b.u") &&
-            struct(col("a.dv"), col("a.v")) < struct(col("b.dv"), col("b.v")))
-          .select(col("a.v").as("v"), col("b.v").as("w"))
-        wedges
-          .join(op.select(col("u").as("v"), col("v").as("w")).hint("shuffle_hash"),
-            Seq("v", "w"))
-          .agg(count(lit(1)).as("t"))
-      }
-      def timedK(f: => DataFrame): Double = {
-        val t = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t) / 1e9
-      }
-      timedK(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timedK(oldArm), timedK(newArm)))
-      report("wedge", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-      op.unpersist()
-    }
-    if (arms("edges")) {
-      def oldArm = orientEdges(coPurchaseEdges(spark, sfDir))
-      def newArm = orientEdgesFromCanon(coPurchaseEdgesCanon(spark, sfDir))
-      timed(newArm) // codegen/JIT lead, charged to neither arm
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("edges", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("q158")) {
-      import graft.sources.Tables
-      // the pre-round-16 step (no hint): SMJ sorts the cached edge
-      // list every iteration; everything else identical to the query
-      def arm(hinted: Boolean): DataFrame = {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-        val e0 = Tables.table(spark, sfDir, "orders")
-          .join(Tables.table(spark, sfDir, "lineitem"),
-            col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey") * 2).cast("long").as("src"),
-            (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-          .distinct()
-          .persist(lvl)
-        val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        val d = e.groupBy(col("src")).agg(count(lit(1)).as("d")).persist(lvl)
-        val m = e.join(d, Seq("src"))
-          .select(col("src"), col("dst"), col("d")).persist(lvl)
-        d.count(); m.count(); e0.unpersist()
-        val r0 = d.select(col("src").as("node"), lit(1000000L).as("r"))
-        def step(r: DataFrame): DataFrame = {
-          val rs = r.withColumnRenamed("node", "src")
-          m.join(if (hinted) rs.hint("shuffle_hash") else rs, Seq("src"))
-            .groupBy(col("dst"))
-            .agg(sum(expr("r DIV d")).as("cs"))
-            .select(col("dst").as("node"),
-              (lit(150000L) + expr("(85 * cs) DIV 100")).as("r"))
-        }
-        step(step(step(r0)))
-          .orderBy(col("r").desc, col("node"))
-          .limit(50)
-      }
-      timed(arm(hinted = true))
-      val cells = (1 to reps).flatMap(_ =>
-        Seq(timed(arm(hinted = false)), timed(arm(hinted = true))))
-      report("q158", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("q280")) {
-      // old = the pre-fix shape (full orientation pinned + counted,
-      // then the %5 filter pinned on top); new = the shipped query
-      // (only the sampled list is ever pinned)
-      def oldArm: DataFrame = {
-        val edges = coPurchaseEdgesCanon(spark, sfDir).persist()
-        val opX = orientEdgesFromCanon(edges).persist()
-        opX.count()
-        edges.unpersist()
-        val h = "(" + graft.queries.Q.uhashSql("27800",
-          "least(u, v) * 4294967296 + greatest(u, v)") + ")"
-        val opS = opX.filter(expr(s"$h % 5 = 0")).persist()
-        val triCounts = triangleResidues(opS, 20L)
-          .agg(count(lit(1)).as("t5"),
-            expr("count_if(huv % 10 = 0 AND hvw % 10 = 0 AND huw % 10 = 0)")
-              .as("t10"),
-            expr("count_if(huv = 0 AND hvw = 0 AND huw = 0)").as("t20"))
-        val edgeCounts = opS.select(expr(s"$h % 20").as("he"))
-          .agg(count(lit(1)).as("n5"),
-            expr("count_if(he % 10 = 0)").as("n10"),
-            expr("count_if(he = 0)").as("n20"))
-        triCounts.crossJoin(edgeCounts)
-      }
-      def newArm: DataFrame =
-        queries("q280_doulion_sweep")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("q280", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("replay")) {
-      // sentinelReplay's drop-0 write: coalesce(1) (shipped) vs natural
-      // parallelism — measures what the single-task encode costs each
-      // streaming drain query (q193/q250/q251/q274) per invocation
-      import graft.queries.Q
-      val ev = graft.sources.Tables.events(spark, sfDir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("CAST(round(value*100) AS BIGINT)").as("value_c"),
-          timestamp_micros(expr("ts_ns DIV 1000")).as("ets"))
-      val out = Q.scratchDir(spark, "graft_ab_replay")
-      def t(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      def oldArm = t(ev.coalesce(1).write.mode("overwrite").parquet(s"$out/c1"))
-      def newArm = t(ev.write.mode("overwrite").parquet(s"$out/par"))
-      newArm
-      val cells = (1 to reps).flatMap(_ => Seq(oldArm, newArm))
-      report("replay", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("drain")) {
-      // streaming drain state-partition count: 2 (shipped) vs 1 —
-      // halves the state-store instances per stateful operator (and
-      // their per-batch commit files on the throttled disk) against
-      // serializing the 100k-row join compute
-      import graft.streaming.EventStream
-      def cell(n: Int): Double = {
-        spark.conf.set("graft.drain.statePartitions", n.toString)
-        val t0 = System.nanoTime()
-        EventStream.leftSemiJoinRollup(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.catalog.listTables().collect()
-          .filter(_.name.startsWith("graft_stream_"))
-          .foreach(t => spark.catalog.dropTempView(t.name))
-        dt
-      }
-      cell(1)
-      val cells = (1 to reps).flatMap(_ => Seq(cell(2), cell(1)))
-      spark.conf.unset("graft.drain.statePartitions")
-      report("drain", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("sym")) {
-      // Components.connectedComponents' symmetrize step: the old
-      // union-of-two-selects executes the caller's edge lineage TWICE
-      // inside the one localCheckpoint job (ReuseExchange shares only
-      // the exchanges, not the post-shuffle work); the shipped
-      // 2-element explode emits both directions from a single pass.
-      // Edge lineage here = q196's levenshtein block join — the
-      // heaviest un-checkpointed input a caller hands Components
-      // (q200/q210); the LSH callers (q72/q77/q108/q275) checkpoint
-      // signatures but still re-run banding + Jaccard verification.
-      import org.apache.spark.sql.execution.LogicalRDD
-      def edgesPlan: DataFrame =
-        graft.queries.AnalyticsQueries5.fuzzyPairs(spark, sfDir)
-          .select(col("id_a"), col("id_b"))
-      def drop(df: DataFrame): Unit =
-        df.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
-          .foreach(_.unpersist(blocking = false))
-      def cell(old: Boolean): Double = {
-        val edges = edgesPlan
-        val t0 = System.nanoTime()
-        val sym =
-          if (old)
-            edges.select(col("id_a").as("a"), col("id_b").as("b"))
-              .union(edges.select(col("id_b").as("a"), col("id_a").as("b")))
-              .localCheckpoint()
-          else
-            edges.select(explode(array(
-                struct(col("id_a").as("a"), col("id_b").as("b")),
-                struct(col("id_b").as("a"), col("id_a").as("b")))).as("e"))
-              .select(col("e.a").as("a"), col("e.b").as("b"))
-              .localCheckpoint()
-        val dt = (System.nanoTime() - t0) / 1e9
-        drop(sym); dt
-      }
-      cell(old = false)
-      val cells = (1 to reps).flatMap(_ => Seq(cell(true), cell(false)))
-      report("sym", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("kcore")) {
-      // q271 pre-r17 plan: union-mirrored MinSupport edges (the pair-
-      // support lineage once per branch when exchange reuse doesn't
-      // line up) + round 1 peeled via two full-edge-list joins against
-      // the all-nodes set (both identity filters). New = the shipped
-      // query (explode mirror, round 1 as a direct degree agg).
-      def oldArm: DataFrame = {
-        val canon = coPurchasePairSupports(spark, sfDir)
-          .filter(col("c") >= 2).select(col("src"), col("dst"))
-        val edges = canon
-          .union(canon.select(col("dst").as("src"), col("src").as("dst")))
-          .persist()
-        def peel(alive: DataFrame): DataFrame =
-          edges.join(alive.select(col("node").as("src")), Seq("src"))
-            .join(alive.select(col("node").as("dst")), Seq("dst"))
-            .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= 3)
-            .select(col("src").as("node")).persist()
-        val levels = Iterator
-          .iterate(edges.select(col("src").as("node")).distinct().persist())(peel)
-          .take(5).toSeq
-        val curve = levels.zipWithIndex.map { case (df, r) =>
-          df.agg(count(lit(1)).as("n_alive"),
-              coalesce(sum(col("node")), lit(0L)).as("key_sum"))
-            .select(lit(r.toLong).as("round"), col("n_alive"), col("key_sum"))
-        }.reduce(_.union(_)).orderBy(col("round"))
-        curve.persist().count()
-        levels.foreach(_.unpersist())
-        edges.unpersist()
-        curve
-      }
-      def newArm: DataFrame =
-        graft.queries.AnalyticsQueries10.queries("q271_kcore")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("kcore", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("stage")) {
-      // sentinelReplay's staging step (q193/q250/q251/q274 pay it once
-      // per drained query): old = a full events scan for max(ets) THEN
-      // the coalesce(1) write (2 jobs over events); new = the max rides
-      // the write job as an observed metric (1 job). Sentinel writes
-      // are identical in both arms and excluded.
-      import graft.queries.Q
-      val out = Q.scratchDir(spark, "graft_ab_stage")
-      def ev = graft.sources.Tables.events(spark, sfDir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("CAST(round(value*100) AS BIGINT)").as("value_c"),
-          timestamp_micros(expr("ts_ns DIV 1000")).as("ets"))
-      def t(f: => Long): Double = {
-        val t0 = System.nanoTime()
-        val mx = f
-        val dt = (System.nanoTime() - t0) / 1e9
-        require(mx > 0L); dt
-      }
-      def oldArm = t {
-        val e = ev
-        val mx = e.agg(max(unix_micros(col("ets")))).collect()(0).getLong(0)
-        e.coalesce(1).write.mode("overwrite").parquet(s"$out/old"); mx
-      }
-      def newArm = t {
-        val obs = org.apache.spark.sql.Observation()
-        ev.observe(obs, max(unix_micros(col("ets"))).as("max_us"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/new")
-        obs.get("max_us").asInstanceOf[Long]
-      }
-      newArm
-      val cells = (1 to reps).flatMap(_ => Seq(oldArm, newArm))
-      report("stage", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("lm")) {
-      import graft.sources.Tables
-      import graft.operators.TextOps
-      // pre-round-17 bigramLmScore: the two-join chain re-exchanges the
-      // bigram occurrence mass for the c1 key; new = shipped q135
-      // (term resolved on the pair table, one bi join)
-      def oldArm: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-          .select(col("doc_id"), TextOps.words(col("text")).as("w"))
-        val bi = docs.filter(size(col("w")) >= 2)
-          .select(col("doc_id"), explode(TextOps.adjacentPairStructs(col("w"))).as("p"))
-          .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
-        val c2 = bi.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c2"))
-        val c1 = bi.groupBy(col("a")).agg(count(lit(1)).as("c1"))
-        bi.join(c2, Seq("a", "b")).join(c1, Seq("a"))
-          .withColumn("term",
-            round(col("c2").cast("double") * 1e6 / col("c1")).cast("long"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("term")).as("lm_u"))
-          .withColumn("avg_p",
-            col("lm_u").cast("double") / 1e6 / col("n_bigrams"))
-          .select(col("doc_id"), col("n_bigrams"), col("lm_u"), col("avg_p"))
-          .orderBy(col("doc_id"))
-      }
-      def newArm: DataFrame =
-        graft.queries.TextQueries.queries("q135_ngram_lm")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("lm", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("lm2")) {
-      import graft.sources.Tables
-      import graft.operators.TextOps
-      // mid-round-17 bigramLmScore (the shape the `lm` arm shipped):
-      // term resolved on the pair table, but c1 still aggregated from
-      // the bigram OCCURRENCE mass — a third pass over the explode
-      // lineage. New = shipped q135 (c1 = Σ_b c2(a, b) off the c2
-      // vocabulary table; the c2 exchange is shared by ReuseExchange).
-      def oldArm: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-          .select(col("doc_id"), TextOps.words(col("text")).as("w"))
-        val bi = docs.filter(size(col("w")) >= 2)
-          .select(col("doc_id"), explode(TextOps.adjacentPairStructs(col("w"))).as("p"))
-          .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
-        val c2 = bi.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c2"))
-        val c1 = bi.groupBy(col("a")).agg(count(lit(1)).as("c1"))
-        val term = c2.join(c1, Seq("a"))
-          .withColumn("term",
-            round(col("c2").cast("double") * 1e6 / col("c1")).cast("long"))
-          .select(col("a"), col("b"), col("term"))
-        bi.join(term, Seq("a", "b"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("term")).as("lm_u"))
-          .withColumn("avg_p",
-            col("lm_u").cast("double") / 1e6 / col("n_bigrams"))
-          .select(col("doc_id"), col("n_bigrams"), col("lm_u"), col("avg_p"))
-          .orderBy(col("doc_id"))
-      }
-      def newArm: DataFrame =
-        graft.queries.TextQueries.queries("q135_ngram_lm")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("lm2", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("novelty")) {
-      import graft.sources.Tables
-      import graft.operators.TextOps
-      // pre-round-17 q151: per-doc novelty via the dg⋈owner join-back;
-      // new = shipped q151 (owner table aggregated by first_doc)
-      def oldArm: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val dg = docs.select(col("doc_id"), TextOps.words(col("text")).as("w"))
-          .select(col("doc_id"), explode(TextOps.ngrams(col("w"), 3)).as("gram"))
-          .distinct()
-        val owner = dg.groupBy(col("gram")).agg(min(col("doc_id")).as("first_doc"))
-        val per = dg.join(owner, Seq("gram"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_grams"),
-            sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
-              .as("n_novel"))
-        docs.select(col("doc_id")).join(per, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-            coalesce(col("n_novel"), lit(0L)).as("n_novel"))
-          .withColumn("novelty",
-            when(col("n_grams") === 0, lit(0.0))
-              .otherwise(col("n_novel").cast("double") / col("n_grams")))
-          .orderBy(col("doc_id"))
-      }
-      def newArm: DataFrame =
-        graft.queries.TextQueries.queries("q151_ngram_novelty")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("novelty", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("compose")) {
-      import graft.sources.Tables
-      // the round-17 representative-attributes finding, both siblings:
-      //  - q244: old = the pre-r17 fp⋈g(rid) join-back; new = the
-      //    SHIPPED min_by-in-the-agg (carries ≤40 B of blocking
-      //    attributes — 3/4 pairwise win, one corpus scan removed).
-      //  - q261: old = the SHIPPED join-back; new = the min_by-TEXT
-      //    variant, measured a consistent local LOSS (the full text
-      //    rides the agg buffers + exchange where the local join is a
-      //    broadcast) and REJECTED — kept here reproducible.
-      def oldQ244: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-        val fp = docs.select(col("doc_id"), col("lang"), col("text"),
-          md5(col("text")).as("fp"))
-        val g = fp.groupBy(col("fp"))
-          .agg(min(col("doc_id")).as("rid"), count(lit(1)).as("n"))
-        val reps = fp.join(g, fp("doc_id") === g("rid"))
-          .select(col("rid").as("doc_id"), col("n"), col("lang"),
-            split(col("text"), " ").getItem(0).as("t1"),
-            substring(col("text"), 1, 40).as("p"))
-        val a = reps.select(col("doc_id").as("id_a"), col("n").as("n_a"),
-          col("lang"), col("t1"), col("p").as("pa"))
-        val b = reps.select(col("doc_id").as("id_b"), col("n").as("n_b"),
-          col("lang"), col("t1"), col("p").as("pb"))
-        a.join(b, Seq("lang", "t1"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"),
-            levenshtein(col("pa"), col("pb"), 15).cast("long").as("dist"),
-            col("n_a"), col("n_b"),
-            (col("n_a") * col("n_b")).as("pair_mult"))
-          .filter(col("dist") >= 0 && col("dist") <= 15)
-          .orderBy(col("id_a"), col("id_b"))
-      }
-      def minByQ261: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val isBenchmark = col("source").isin("src2")
-        val fp = docs.filter(!isBenchmark)
-          .select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
-        val reps = fp.groupBy(col("fp"))
-          .agg(min(col("doc_id")).as("rid"), count(lit(1)).as("n_copies"),
-            min_by(col("text"), col("doc_id")).as("text"))
-          .select(col("rid").as("doc_id"), col("n_copies"), col("text"))
-        val combined = docs.filter(isBenchmark)
-          .select(col("doc_id"), lit(null).cast("long").as("n_copies"),
-            col("text"), lit(true).as("is_b"))
-          .unionByName(reps.select(col("doc_id"), col("n_copies"), col("text"),
-            lit(false).as("is_b")))
-        graft.operators.TextOps.decontaminateBloom(combined, "doc_id", "text",
-            col("is_b"), k = 3, expectedItems = 1L << 17, fpp = 0.03)
-          .join(reps.select(col("doc_id"), col("n_copies")), Seq("doc_id"))
-          .select(col("doc_id").as("rep_id"), col("n_copies"), col("n_shared"),
-            col("contaminated"))
-          .orderBy(col("rep_id"))
-      }
-      for ((tag, oldArm, newArm) <- Seq(
-          ("compose244", () => oldQ244,
-            () => SparkEntry.queries("q244_dedup_compose")(spark, sfDir)),
-          ("compose261",
-            () => SparkEntry.queries("q261_decon_compose")(spark, sfDir),
-            () => minByQ261))) {
-        timed(newArm())
-        val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm()), timed(newArm())))
-        report(tag, cells.grouped(2).map(_.head).toSeq,
-          cells.grouped(2).map(_.last).toSeq)
-      }
-    }
-    if (arms("rank1")) {
-      import graft.sources.Tables
-      import org.apache.spark.sql.expressions.Window
-      // the round-17 rank-1→min_by family, timed as ONE summed cell
-      // per arm (q175 + q60 + q17 share the finding: a
-      // row_number(metric DESC, id)=1 window re-exchanges and sorts a
-      // match/count mass that one min_by agg reduces in place; q89's
-      // identical best-pick tail is oracle-gated and too small to time
-      // here). Old = the three pre-r17 window plans; new = the three
-      // shipped queries. Summed cells amortize fast-tail noise.
-      def oldQ175: DataFrame = {
-        val c = Tables.events(spark, sfDir)
-          .groupBy(col("user_id"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("cnt").desc, col("event_type"))
-        c.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("user_id"), col("event_type").as("mode_type"), col("cnt"))
-          .orderBy(col("user_id"))
-      }
-      def oldQ60: DataFrame = {
-        def boxes(of: String, id: String) = Tables.events(spark, sfDir)
-          .withColumn("value_c", expr("CAST(round(value*100) AS BIGINT)"))
-          .filter(col("event_type") === of)
-          .select(col("event_id").as(id), col("user_id").as(s"frame_$id"),
-            col("value_c").as(s"vc_$id"),
-            (col("value") % 50).as(s"x1_$id"),
-            (col("event_id") % 40).cast("double").as(s"y1_$id"))
-          .withColumn(s"x2_$id", col(s"x1_$id") + 20.0)
-          .withColumn(s"y2_$id", col(s"y1_$id") + 15.0)
-        val gt = boxes("view", "g")
-          .withColumn("speaker", concat(lit("spk"), col("g") % 5))
-          .withColumn("gt_label", (col("g") % 2).cast("long"))
-        val pred = boxes("click", "p")
-          .withColumn("pred_label", when(col("vc_p") > 25000L, 1L).otherwise(0L))
-        val matched = gt.join(pred, col("frame_g") === col("frame_p"))
-          .withColumn("ix", greatest(lit(0.0),
-            least(col("x2_g"), col("x2_p")) - greatest(col("x1_g"), col("x1_p"))))
-          .withColumn("iy", greatest(lit(0.0),
-            least(col("y2_g"), col("y2_p")) - greatest(col("y1_g"), col("y1_p"))))
-          .withColumn("iou_col", col("ix") * col("iy") / lit(300.0))
-          .filter(col("iou_col") > 0.5)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("g")).orderBy(col("iou_col").desc, col("p"))))
-          .filter(col("rn") === 1)
-        matched.groupBy(col("speaker"))
-          .agg(
-            sum(when(col("pred_label") === 1 && col("gt_label") === 1, 1L).otherwise(0L)).as("tp"),
-            sum(when(col("pred_label") === 1 && col("gt_label") === 0, 1L).otherwise(0L)).as("fp"),
-            sum(when(col("pred_label") === 0 && col("gt_label") === 1, 1L).otherwise(0L)).as("fn"),
-            sum(when(col("pred_label") === 0 && col("gt_label") === 0, 1L).otherwise(0L)).as("tn"))
-          .withColumn("f1", (lit(2) * col("tp")).cast("double")
-            / (lit(2) * col("tp") + col("fp") + col("fn")))
-          .withColumn("accuracy", (col("tp") + col("tn")).cast("double")
-            / (col("tp") + col("fp") + col("fn") + col("tn")))
-          .orderBy(col("speaker"))
-      }
-      def oldQ17: DataFrame = {
-        def boxes(of: String, idName: String) = Tables.events(spark, sfDir)
-          .filter(col("event_type") === of)
-          .select(col("event_id").as(idName), col("user_id").as("frame"),
-            (col("value") % 50).as(s"x1_$idName"),
-            (col("event_id") % 40).cast("double").as(s"y1_$idName"))
-          .withColumn(s"x2_$idName", col(s"x1_$idName") + 20.0)
-          .withColumn(s"y2_$idName", col(s"y1_$idName") + 15.0)
-        val gt = boxes("view", "gt_id")
-        val pr = boxes("click", "pred_id").withColumnRenamed("frame", "frame_p")
-        val joined = gt.join(pr, col("frame") === col("frame_p"))
-          .withColumn("ix", greatest(lit(0.0), least(col("x2_gt_id"), col("x2_pred_id")) - greatest(col("x1_gt_id"), col("x1_pred_id"))))
-          .withColumn("iy", greatest(lit(0.0), least(col("y2_gt_id"), col("y2_pred_id")) - greatest(col("y1_gt_id"), col("y1_pred_id"))))
-          .withColumn("inter", col("ix") * col("iy"))
-          .withColumn("iou", col("inter") / (lit(600.0) - col("inter")))
-          .filter(col("iou") >= 0.3)
-        joined
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("gt_id")).orderBy(col("iou").desc, col("pred_id"))))
-          .filter(col("rn") === 1)
-          .select(col("gt_id"), col("pred_id"), round(col("iou"), 6).as("iou_r"))
-          .orderBy(col("gt_id"))
-      }
-      def oldAll(): Unit =
-        Seq(oldQ175, oldQ60, oldQ17).foreach(
-          _.write.format("noop").mode("overwrite").save())
-      def newAll(): Unit =
-        Seq("q175_user_mode", "q60_columbia_eval", "q17_iou_match").foreach(n =>
-          SparkEntry.queries(n)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save())
-      def cell(f: () => Unit): Double = {
-        val t0 = System.nanoTime(); f(); val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache(); dt
-      }
-      cell(() => newAll())
-      val cells = (1 to reps).flatMap(_ => Seq(cell(() => oldAll()), cell(() => newAll())))
-      report("rank1", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("rep")) {
-      import graft.sources.Tables
-      // pre-round-17 q75: top word via per-doc row_number window +
-      // totals⋈top join; new = shipped q75 (min_by in the totals agg)
-      def oldArm: DataFrame = {
-        val docs = Tables.documentsWide(spark, sfDir)
-        val wc = docs
-          .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("word"))
-          .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("wn"))
-        val top = wc
-          .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("doc_id")).orderBy(col("wn").desc, col("word"))))
-          .filter(col("rn") === 1)
-          .select(col("doc_id"), col("word").as("top_word"), col("wn").as("top_word_n"))
-        val totals = wc.groupBy(col("doc_id"))
-          .agg(sum(col("wn")).as("n_words"), count(lit(1)).as("n_distinct_words"))
-        val bc = docs
-          .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
-          .select(col("doc_id"), explode(when(size(col("w")) >= 2,
-              expr("transform(sequence(0, size(w)-2), i -> array_join(slice(w, i+1, 2), ' '))"))
-            .otherwise(expr("CAST(array() AS ARRAY<STRING>)"))).as("bg"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), countDistinct(col("bg")).as("n_distinct_bigrams"))
-        totals.join(top, Seq("doc_id")).join(bc, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_words"), col("n_distinct_words"),
-            col("top_word"), col("top_word_n"),
-            (col("top_word_n").cast("double") / col("n_words")).as("top_word_frac"),
-            coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-            coalesce(col("n_distinct_bigrams"), lit(0L)).as("n_distinct_bigrams"),
-            when(coalesce(col("n_bigrams"), lit(0L)) === 0L, lit(0.0))
-              .otherwise((col("n_bigrams") - col("n_distinct_bigrams")).cast("double")
-                / col("n_bigrams")).as("dup_bigram_frac"))
-          .orderBy(col("doc_id"))
-      }
-      def newArm: DataFrame =
-        graft.queries.TextQueries.queries("q75_doc_repetition")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("rep", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("span")) {
-      import graft.sources.Tables
-      import graft.operators.TextOps
-      // pre-round-17 q92: spans⋈counts join-back; new = shipped q92
-      // (unique groups attribute via min(id); dup = total − unique)
-      def oldArm: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val raw = docs
-          .select(col("doc_id"), TextOps.words(col("text")).as("w"))
-          .select(col("doc_id"), explode(TextOps.ngrams(col("w"), 20)).as("span"))
-        val spans = raw.select(col("doc_id"), xxhash64(col("span")).as("k1"),
-          xxhash64(lit(0x9E3779B97F4A7C15L), col("span")).as("k2"))
-        val counts = spans.groupBy(col("k1"), col("k2")).agg(count(lit(1)).as("n_glob"))
-        val perDoc = spans.join(counts, Seq("k1", "k2"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_spans"),
-            sum(when(col("n_glob") > 1, 1L).otherwise(0L)).as("n_dup_spans"))
-        docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-            coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"))
-          .withColumn("dup_frac",
-            when(col("n_spans") === 0, lit(0.0))
-              .otherwise(col("n_dup_spans").cast("double") / col("n_spans")))
-          .orderBy(col("doc_id"))
-      }
-      def newArm: DataFrame =
-        graft.queries.TextQueries.queries("q92_span_dedup")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("span", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("para")) {
-      import graft.sources.Tables
-      import graft.operators.TextOps
-      // q143: old = the SHIPPED ch⋈docCounts join-back; new = the
-      // round-17 agg-only candidate (level-1 (fp, doc) agg +
-      // min(doc_id) attribution) — measured a consistent local LOSS
-      // (the extra agg level adds a sequential stage) and NOT shipped;
-      // the arm stays so the rejection is reproducible.
-      def oldArm: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val ch = TextOps.chunk(docs, "doc_id", "text", window = 10, stride = 10)
-        val docCounts = ch.select(col("chunk_fp"), col("doc_id")).distinct()
-          .groupBy(col("chunk_fp")).agg(count(lit(1)).as("n_docs"))
-        val perDoc = ch.join(docCounts, Seq("chunk_fp"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_chunks"),
-            sum(when(col("n_docs") === 1, 1L).otherwise(0L)).as("n_kept"),
-            sum(when(col("n_docs") === 1, col("n_chunk_tokens")).otherwise(0L))
-              .as("kept_tokens"))
-        docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-            coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"))
-          .orderBy(col("doc_id"))
-      }
-      def newArm: DataFrame = {
-        val docs = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val ch = TextOps.chunk(docs, "doc_id", "text", window = 10, stride = 10)
-        val base = ch.groupBy(col("chunk_fp"), col("doc_id"))
-          .agg(count(lit(1)).as("n_c"), sum(col("n_chunk_tokens")).as("tok"))
-        val perFp = base.groupBy(col("chunk_fp"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_c")).as("n_ch"),
-            sum(col("tok")).as("tok_g"), min(col("doc_id")).as("only_doc"))
-        val kept = perFp.filter(col("n_docs") === 1)
-          .groupBy(col("only_doc").as("doc_id"))
-          .agg(sum(col("n_ch")).as("n_kept"), sum(col("tok_g")).as("kept_tokens"))
-        val perDoc = base.groupBy(col("doc_id")).agg(sum(col("n_c")).as("n_chunks"))
-          .join(kept, Seq("doc_id"), "left")
-        docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-            coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"))
-          .orderBy(col("doc_id"))
-      }
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("para", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("overlap")) {
-      import graft.sources.Tables
-      import graft.operators.TextOps
-      // pre-round-17 q128: distinct (source, gram) pairs + gram
-      // self-join; new = shipped q128 (collect_set + in-array pairs)
-      def oldArm: DataFrame = {
-        val grams = Tables.table(spark, sfDir, "documents")
-          .repartition(spark.sparkContext.defaultParallelism)
-          .select(col("source"), TextOps.words(col("text")).as("w"))
-          .select(col("source"), explode(TextOps.ngrams(col("w"), 3)).as("g"))
-          .distinct()
-        val a = grams.select(col("source").as("src_a"), col("g"))
-        val b = grams.select(col("source").as("src_b"), col("g"))
-        a.join(b, Seq("g")).filter(col("src_a") < col("src_b"))
-          .groupBy(col("src_a"), col("src_b"))
-          .agg(count(lit(1)).as("shared_grams"))
-          .orderBy(col("src_a"), col("src_b"))
-      }
-      def newArm: DataFrame =
-        graft.queries.TextQueries.queries("q128_source_overlap")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("overlap", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("gapfill")) {
-      import graft.sources.Tables
-      import graft.queries.Q
-      import org.apache.spark.sql.expressions.Window
-      // pre-round-17 q168: grid LEFT JOIN ob; new = shipped q168
-      // (union + one (user, hr) agg)
-      def oldArm: DataFrame = {
-        val ob = Tables.events(spark, sfDir)
-          .withColumn("hr", expr("ts_ns DIV 3600000000000"))
-          .groupBy(col("user_id"), col("hr"))
-          .agg(max(struct(col("ts_ns"), col("event_id"),
-            Q.cents(col("value")).as("cents"))).as("m"))
-          .select(col("user_id"), col("hr"), col("m.cents").as("ob_cents"))
-          .persist()
-        val grid = ob.groupBy(col("user_id"))
-          .agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
-          .select(col("user_id"), explode(sequence(col("lo"), col("hi"))).as("hr"))
-        val w = Window.partitionBy(col("user_id")).orderBy(col("hr"))
-        grid.join(ob, Seq("user_id", "hr"), "left")
-          .select(col("user_id"), col("hr"),
-            last(col("ob_cents"), ignoreNulls = true).over(w).as("filled_cents"),
-            when(col("ob_cents").isNull, 0L).otherwise(1L).as("observed"))
-          .orderBy(col("user_id"), col("hr"))
-      }
-      def newArm: DataFrame =
-        graft.queries.ShapeQueries.queries("q168_gap_fill")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("gapfill", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
-    if (arms("conf")) {
-      // Generic planner-policy A/B over registry queries: OLD = the
-      // session defaults (the shipped/driver-comparable policy), NEW =
-      // the same query with SPARK_GRAFT_AB_CONF applied for that cell
-      // only. Conf values are restored after every cell so arms never
-      // contaminate each other.
-      val qNames = sys.env.getOrElse("SPARK_GRAFT_AB_QUERY", "q271_kcore")
-        .split(",").map(_.trim).filter(_.nonEmpty)
-      val confKv = sys.env.getOrElse("SPARK_GRAFT_AB_CONF",
-          "spark.sql.join.preferSortMergeJoin=false")
-        .split(";").map(_.trim).filter(_.nonEmpty)
-        .map { kv =>
-          kv.split("=", 2) match {
-            case Array(k, v) => (k, v)
-            case _ => sys.error(s"SPARK_GRAFT_AB_CONF entry '$kv' is not key=value")
-          }
-        }
-      val registry = SparkEntry.queries
-      for (qn <- qNames) {
-        val q = registry.getOrElse(qn, sys.error(s"unknown query key: $qn"))
-        def cell(applyConf: Boolean): Double = {
-          val saved = confKv.map { case (k, _) => (k, spark.conf.getOption(k)) }
-          if (applyConf) confKv.foreach { case (k, v) => spark.conf.set(k, v) }
-          try timed(q(spark, sfDir))
-          finally saved.foreach { case (k, ov) =>
-            ov.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-          }
-        }
-        cell(applyConf = true) // codegen/JIT lead, charged to neither arm
-        val cells = (1 to reps).flatMap(_ => Seq(cell(false), cell(true)))
-        report(s"conf_$qn", cells.grouped(2).map(_.head).toSeq,
-          cells.grouped(2).map(_.last).toSeq)
-      }
-    }
-    if (arms("q185")) {
-      import graft.sources.Tables
-      // the pre-round-16 q185 plan, verbatim
-      def oldArm: DataFrame = {
-        val li = Tables.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-          .persist() // as the pre-rewrite query did; timed() clears after
-        val n = li.groupBy(col("pk")).agg(count(lit(1)).as("n"))
-        val co = li.groupBy(col("ok")).agg(collect_set(col("pk")).as("ps"))
-          .select(explode(col("ps")).as("item"), col("ps"))
-          .select(col("item"), explode(col("ps")).as("other"))
-          .filter(col("item") =!= col("other"))
-          .groupBy(col("item"), col("other"))
-          .agg(count(lit(1)).as("c"))
-        scoreTop5(co, n)
-      }
-      def newArm: DataFrame =
-        graft.queries.AnalyticsQueries3
-          .queries("q185_item_similarity")(spark, sfDir)
-      timed(newArm)
-      val cells = (1 to reps).flatMap(_ => Seq(timed(oldArm), timed(newArm)))
-      report("q185", cells.grouped(2).map(_.head).toSeq,
-        cells.grouped(2).map(_.last).toSeq)
-    }
     spark.stop()
-  }
-
-  /** The unchanged scoring/window tail of q185, shared by both arms. */
-  private def scoreTop5(co: DataFrame, n: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = co
-      .join(n.select(col("pk").as("item"), col("n").as("n_item")), Seq("item"))
-      .join(n.select(col("pk").as("other"), col("n").as("n_other")), Seq("other"))
-      .select(col("item"), col("other"),
-        expr("(1000000 * c * c) DIV (n_item * n_other)").as("score"), col("c"))
-    val w = Window.partitionBy(col("item"))
-      .orderBy(col("score").desc, col("other"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
-      .select(col("item"), col("rk"), col("other"), col("c"), col("score"))
-      .orderBy(col("item"), col("rk"))
   }
 }

@@ -1,41 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * SPARK_GRAFT_ONLY limits the dump as it does for Bench. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Run.session(Run.cpus, Run.cpus)
     new java.io.File(outDir).mkdirs()
-    // Local profiling aid (same contract as Bench): SPARK_GRAFT_ONLY
-    // limits the dump to a comma-separated prefix-matched subset.
-    // Unset (the driver's case) = every declared query.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // Queries persist() intermediates their returned plan reads more
-        // than once; there is no in-query point to unpersist (the action
-        // happens here). Drop the cache between queries so ~20 cached
-        // frames don't accumulate across the 200+-query dump (Bench does
-        // the same).
-        spark.catalog.clearCache()
-      }
+    for (name <- Run.selected())
+      Run.exec(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      ).left.foreach(f => System.err.println(s"[verify] ${f.message}"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

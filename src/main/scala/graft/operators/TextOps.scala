@@ -205,7 +205,7 @@ object TextOps {
     // the join is a broadcast and text never shuffles at all. The
     // q244 sibling (whose min_by carries ≤40 B of blocking
     // attributes, not text) shipped the rewrite; this one keeps the
-    // join-back. OptAbProbe arm `compose` reproduces both shapes.
+    // join-back. Measurement: OPTIMIZATION_r17.md.
     val fp = docs.filter(!isBenchmark)
       .select(col(idCol), col(textCol), md5(col(textCol)).as("fp"))
     val g = fp.groupBy(col("fp"))

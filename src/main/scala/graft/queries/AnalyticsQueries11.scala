@@ -31,7 +31,7 @@ object AnalyticsQueries11 extends QueryPack {
     * pair-level exchange), pairs expand INSIDE the array via the
     * double explode, and the final distinct collapses multi-order
     * repeats. The single definition behind q173 / q278 / q280 /
-    * q281 / TriSampleProbe (round-15 verdict task 5). */
+    * q281 (round-15 verdict task 5). */
   private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.table(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -354,7 +354,7 @@ object AnalyticsQueries11 extends QueryPack {
     // total order counts the same set) — it must build that
     // orientation anyway for the exact calibration leg. A production
     // estimate-only run samples FIRST and orients the p-fraction
-    // instead (q281 / TriSampleProbe), paying p× the degree build.
+    // instead (q281), paying p× the degree build.
     "q278_doulion_triangles" -> { (s, dir) =>
       val edges = coPurchaseEdgesCanon(s, dir)
       // ONE orientation pass AND ONE wedge join for both legs

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.RollingHash
 import graft.operators.{Dedup, Similarity, SpeakingSegments, Tracker}
+import graft.sinks.MediaSinks.Archive
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -30,14 +31,6 @@ object DomainQueries extends QueryPack {
 
   /** Same English stopword family as TextQueries.STOP_EN (q21/q22). */
   private val STOP_EN_RE = "\\b(the|and|of|to|in|is|a)\\b"
-
-  /** Sink layout for q67/q68: Archive (the scale default) unless
-    * SPARK_GRAFT_SINK_MODE=perfile — both layouts produce identical
-    * manifests, so the oracle is mode-independent by construction. */
-  private def envSinkMode: graft.sinks.MediaSinks.SinkMode =
-    if (sys.env.get("SPARK_GRAFT_SINK_MODE").exists(_.equalsIgnoreCase("perfile")))
-      graft.sinks.MediaSinks.PerFile
-    else graft.sinks.MediaSinks.Archive
 
   /** Dense per-user frame index + score columns from events (the
     * score-series shape of the reference's scores.pckl). */
@@ -355,9 +348,8 @@ object DomainQueries extends QueryPack {
       // Archive mode: one zip per partition instead of 2 files per
       // segment — same manifest rows/bytes (oracle unchanged), minus
       // the small-files storm. Per-file reference parity is covered
-      // by SinksSpec; SPARK_GRAFT_SINK_MODE=perfile flips both sink
-      // queries for A/B profiling.
-      graft.sinks.MediaSinks.cutSegments(s, segs, out, mode = envSinkMode)
+      // by SinksSpec.
+      graft.sinks.MediaSinks.cutSegments(s, segs, out, mode = Archive)
         .groupBy(col("video_id"))
         .agg(count(lit(1)).as("n_files"), sum(col("n_bytes")).as("bytes_sum"))
         .orderBy(col("video_id"))
@@ -375,7 +367,7 @@ object DomainQueries extends QueryPack {
       val out = scratchDir(s, "graft_cropsink")
       // Archive mode — see q67; per-track byte/sample formulas and the
       // manifest aggregation are identical in both layouts.
-      graft.sinks.MediaSinks.writeTrackCrops(s, proc, out, mode = envSinkMode)
+      graft.sinks.MediaSinks.writeTrackCrops(s, proc, out, mode = Archive)
         .groupBy(col("video_id"))
         .agg(count(lit(1)).as("n_tracks"), sum(col("n_bytes")).as("bytes_sum"),
           sum(col("wav_samples")).as("samples_sum"))
@@ -447,7 +439,7 @@ object DomainQueries extends QueryPack {
           ((col("value") + 100.0) / 1000.0).as("x2"),
           ((col("value") + 100.0) / 2000.0).as("y2"))
       val out = scratchDir(s, "graft_facesink")
-      graft.sinks.MediaSinks.writeFaceCrops(s, rows, out, mode = envSinkMode)
+      graft.sinks.MediaSinks.writeFaceCrops(s, rows, out, mode = Archive)
         .groupBy(col("video_key"), col("entity_id"))
         .agg(count(lit(1)).as("n_files"), sum(col("n_bytes")).as("bytes_sum"))
         .orderBy(col("video_key"), col("entity_id"))

@@ -254,38 +254,24 @@ object ShapeQueries extends QueryPack {
         .distinct()
         .persist(lvl)
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      // EAGER-FREE of the raw pair cache is the SHIPPED default
-      // (round-14 verdict task 2, measured by tools/pr_rung4_ab.sh —
+      // EAGER-FREE of the raw pair cache (round-14 verdict task 2,
       // ARCHITECTURE.md "q158 rung-4 A/B"): e0 has ZERO readers once
       // deg and ed materialize (~1/3 of the cached loop-invariant
       // bytes, dead weight), and at rungs where the cache set
       // competes with shuffle memory the free restores LINEARITY —
-      // sf30→sf100 went from 6.9× on 3.33× rows (r14, base) to 2.9×
-      // (free0), with sf30 −26% and sf100 −33% at min-of-3. The
+      // sf30→sf100 went from 6.9× on 3.33× rows (r14, lazy) to 2.9×
+      // (eager free), with sf30 −26% and sf100 −33% at min-of-3. The
       // isolating counter-arm: localCheckpoint's DESERIALIZED blocks
-      // (ckpt) are 3–4× the SER bytes — +73% at sf30 and ENOSPC at
-      // sf100 — so the above-linear term is cached loop-invariant
-      // BYTES vs one box's RAM, not lineage depth. The two probe
-      // variants stay reproducible behind SPARK_GRAFT_PR_VARIANT
-      // (base = r14's lazy shape, ckpt = the checkpoint arm).
-      val (degV, edV) = sys.env.get("SPARK_GRAFT_PR_VARIANT") match {
-        case Some("ckpt") =>
-          val d = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-            .localCheckpoint()
-          val m = e.join(d, Seq("src"))
-            .select(col("src"), col("dst"), col("d")).localCheckpoint()
-          e0.unpersist()
-          (d, m)
-        case v =>
-          val d = e.groupBy(col("src")).agg(count(lit(1)).as("d")).persist(lvl)
-          val m = e.join(d, Seq("src"))
-            .select(col("src"), col("dst"), col("d")).persist(lvl)
-          if (!v.contains("base")) { d.count(); m.count(); e0.unpersist() }
-          (d, m)
-      }
+      // are 3–4× the SER bytes — +73% at sf30 and ENOSPC at sf100 —
+      // so the above-linear term is cached loop-invariant BYTES vs
+      // one box's RAM, not lineage depth.
+      val degV = e.groupBy(col("src")).agg(count(lit(1)).as("d")).persist(lvl)
+      val edV = e.join(degV, Seq("src"))
+        .select(col("src"), col("dst"), col("d")).persist(lvl)
+      degV.count(); edV.count(); e0.unpersist()
       val r0 = degV.select(col("src").as("node"), lit(1000000L).as("r"))
       // A SHUFFLE_HASH hint on the rank side was measured in round 16
-      // (OptAbProbe ab_q158, 4 alternating same-JVM reps at sf0.1) and
+      // (OPTIMIZATION_r16.md, 4 alternating same-JVM reps at sf0.1) and
       // came out a WASH (pairwise 2–2, mins 4.67 vs 4.82): edV is
       // cached with the ordering its own build join produced, so the
       // per-iteration SMJ never re-sorts it — the sort the hint would

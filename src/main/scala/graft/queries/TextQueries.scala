@@ -493,7 +493,7 @@ object TextQueries extends QueryPack {
     // min(doc_id) attribution, no join-back — measured a CONSISTENT
     // local loss (min 1.19 → 1.38 s, 3/4 pairwise: the extra agg level
     // adds a sequential stage that dominates at this chunk mass) and
-    // was not shipped; OptAbProbe arm `para` reproduces both shapes.)
+    // was not shipped; measurement in OPTIMIZATION_r17.md.)
     "q143_paragraph_dedup" -> { (s, dir) =>
       val docs = Tables.table(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)

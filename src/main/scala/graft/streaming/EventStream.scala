@@ -308,26 +308,12 @@ object EventStream {
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val oldNoData = spark.conf.getOption(noDataKey)
     spark.conf.set(noDataKey, "false")
-    // Measurement knob (tools/state_ab_probe.sh — the round-14 rung-3
-    // A/B on q193's above-linear curve): SPARK_GRAFT_STATE_PROVIDER=
-    // rocksdb swaps the per-batch state store for the RocksDB provider
-    // (the one q199's transformWithState already requires,
-    // TwsTimeline.scala) so the commit/rescan cost of the default
-    // HDFS-backed in-memory map can be isolated from the join
-    // machinery. Unset ⇒ the session default — results are provider-
-    // independent either way; only the state commit path changes.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProvider = spark.conf.getOption(providerKey)
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      spark.conf.set(providerKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
     // Measurement knob (round-16 optimization A/B): the drained
     // replays' state-partition count, overridable per session so one
-    // JVM can compare counts under the same regime (the
-    // SPARK_GRAFT_PR_VARIANT pattern). Results are partition-count
-    // independent (deterministic join/agg semantics; the sink is
-    // batch-aggregated after the drain); only the number of state
-    // stores per stateful operator changes. Default 2 — the shipped,
+    // JVM can compare counts under the same regime. Results are
+    // partition-count independent (deterministic join/agg semantics;
+    // the sink is batch-aggregated after the drain); only the number
+    // of state stores per stateful operator changes. Default 2 — the shipped,
     // driver-comparable value.
     val drainParts = spark.conf.getOption("graft.drain.statePartitions")
       .map { v =>
@@ -347,12 +333,6 @@ object EventStream {
       oldNoData match {
         case Some(v) => spark.conf.set(noDataKey, v)
         case None => spark.conf.unset(noDataKey)
-      }
-      oldProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None if sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb") =>
-          spark.conf.unset(providerKey)
-        case None => ()
       }
     }
     spark.table(name)

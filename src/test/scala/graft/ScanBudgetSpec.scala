@@ -93,7 +93,7 @@ class ScanBudgetSpec extends SparkSpec {
         "MinHash shingle scan, the wordCounts agg, the stop-word " +
         "margin scan, the component node list, plus the q72 loop's " +
         "deterministic localCheckpoint block re-reads. Measured 8.79R " +
-        "by the round-17 full-surface ScanSweep; one added corpus " +
+        "by the round-17 full-surface scan sweep; one added corpus " +
         "pass (+1.0R) trips the 0.5R headroom."),
     ("q244_dedup_compose", 0.9, 1.5,
       "ONE corpus text scan: the md5 group agg carries the " +
