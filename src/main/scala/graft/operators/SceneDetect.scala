@@ -170,30 +170,42 @@ object SceneDetect {
       }
   }
 
-  /** The ContentDetector cut scan over real content values: lastCut
-    * starts at the first frame; a frame with content ≥ threshold cuts
-    * iff it is ≥ minSceneLen past the last cut. The next cut after
-    * position c is therefore min{f : content(f) ≥ t, f − c ≥ L} —
-    * which is what makes the sequential scan expressible as a
-    * recursive CTE on the oracle side. */
-  def scenesFromPayloads(rows: Array[(Int, Array[Byte])], h: Int, w: Int,
-      threshold: Double = 27.0, minSceneLen: Int = 15): Seq[(Int, Int)] = {
-    val sorted = rows.sortBy(_._1)
-    if (sorted.isEmpty) return Seq.empty
-    val first = sorted.head._1
-    val end = sorted.last._1 + 1
-    val contents = contentVals(sorted, h, w)
-    val cuts = Seq.newBuilder[Int]
+  /** One video's sorted (frame, payload) rows → every frame's content
+    * value, the first frame (no predecessor) scoring 0.0. Each frame
+    * is decoded once. */
+  def frameContents(sorted: Array[(Int, Array[Byte])], h: Int, w: Int): Array[(Int, Double)] =
+    if (sorted.isEmpty) Array.empty
+    else (sorted.head._1, 0.0) +: contentVals(sorted, h, w)
+
+  /** The ContentDetector cut scan over one video's sorted
+    * [[frameContents]], returning the scenes [start, end) the cuts
+    * delimit: lastCut starts at the first frame (whose value is never
+    * scanned); a frame with content ≥ threshold cuts iff it is
+    * ≥ minSceneLen past the last cut. The next cut after position c is
+    * therefore min{f : content(f) ≥ t, f − c ≥ L} — which is what makes
+    * the sequential scan expressible as a recursive CTE on the oracle
+    * side. */
+  def cuts(contents: Array[(Int, Double)], threshold: Double = 27.0,
+      minSceneLen: Int = 15): Seq[(Int, Int)] = {
+    if (contents.isEmpty) return Seq.empty
+    val first = contents.head._1
+    val end = contents.last._1 + 1
+    val found = Seq.newBuilder[Int]
     var lastCut = first
-    var i = 0
+    var i = 1
     while (i < contents.length) {
       val (f, c) = contents(i)
-      if (c >= threshold && f - lastCut >= minSceneLen) { cuts += f; lastCut = f }
+      if (c >= threshold && f - lastCut >= minSceneLen) { found += f; lastCut = f }
       i += 1
     }
-    val bounds = (first +: cuts.result()) :+ end
+    val bounds = (first +: found.result()) :+ end
     bounds.sliding(2).map(b => (b(0), b(1))).toSeq
   }
+
+  /** [[cuts]] over one video's (frame, payload) rows in any order. */
+  def scenesFromPayloads(rows: Array[(Int, Array[Byte])], h: Int, w: Int,
+      threshold: Double = 27.0, minSceneLen: Int = 15): Seq[(Int, Int)] =
+    cuts(frameContents(rows.sortBy(_._1), h, w), threshold, minSceneLen)
 
   /** payloads(video_id, frame, payload) → scene table, content series
     * computed for real inside the per-video kernel. Payload bytes

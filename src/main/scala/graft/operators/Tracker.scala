@@ -52,9 +52,13 @@ object Tracker {
     * output order) — the order the reference sees them. */
   def trackScene(dets: Seq[Det], iouThres: Double = 0.5, numFailedDet: Int = 10,
       minTrack: Int = 11, minFaceSize: Double = 1.0): Seq[Seq[Det]] = {
-    // frame buckets, preserving in-frame order; mutable like the reference's sceneFaces
-    val frames: Vector[ArrayBuffer[Det]] =
-      dets.groupBy(_.frame).toVector.sortBy(_._1).map { case (_, fs) => ArrayBuffer(fs: _*) }
+    // frame buckets in frame order, preserving in-frame order (the sort
+    // is stable); mutable like the reference's sceneFaces
+    val frames = ArrayBuffer.empty[ArrayBuffer[Det]]
+    dets.sortBy(_.frame).foreach { d =>
+      if (frames.nonEmpty && frames.last.head.frame == d.frame) frames.last += d
+      else frames += ArrayBuffer(d)
+    }
     val out = ArrayBuffer.empty[Seq[Det]]
     var go = true
     while (go) {
@@ -69,10 +73,10 @@ object Tracker {
           val face = frameFaces(idx)
           idx += 1
           if (track.isEmpty) {
-            track += face; frameFaces.remove(frameFaces.indexOf(face))
+            track += face; removeFirst(frameFaces, face)
           } else if (face.frame - track.last.frame <= numFailedDet) {
             if (iou(face, track.last) > iouThres) {
-              track += face; frameFaces.remove(frameFaces.indexOf(face))
+              track += face; removeFirst(frameFaces, face)
             }
           } else {
             broke = true // reference's `else: break`
@@ -81,7 +85,7 @@ object Tracker {
       }
       if (track.isEmpty) go = false
       else if (track.length > minTrack) { // strict >, demoTalkNet.py:167
-        val interp = interpolate(track.toSeq)
+        val interp = interpolate(track.toIndexedSeq)
         val meanW = interp.iterator.map(d => d.x2 - d.x1).sum / interp.length
         val meanH = interp.iterator.map(d => d.y2 - d.y1).sum / interp.length
         if (math.max(meanW, meanH) > minFaceSize) out += interp
@@ -90,19 +94,33 @@ object Tracker {
     out.toSeq
   }
 
+  /** `list.remove(face)`: drops the first element equal to `d`, which
+    * is in `buf` (a while loop: `indexOf` builds a view per call). */
+  private def removeFirst(buf: ArrayBuffer[Det], d: Det): Unit = {
+    var j = 0
+    while (buf(j) != d) j += 1
+    buf.remove(j)
+  }
+
   /** Dense per-coordinate linear interpolation over [first..last]
     * (interp1d over known frames, demoTalkNet.py:168–175). When one
     * frame occurs multiple times in a track, the LAST occurrence wins
-    * the sample point (interp1d keeps the last duplicate x). */
+    * the sample point (interp1d keeps the last duplicate x). One
+    * pointer walks the known frames, so a track is linear in its span. */
   def interpolate(track: Seq[Det]): Seq[Det] = {
-    val byFrame = track.map(d => d.frame -> d).toMap // last occurrence wins
-    val known = byFrame.keys.toArray.sorted
+    val known = ArrayBuffer.empty[Det] // one sample per frame, ascending
+    track.sortBy(_.frame).foreach { d => // stable: duplicates keep track order
+      if (known.nonEmpty && known.last.frame == d.frame) known(known.length - 1) = d
+      else known += d
+    }
     val f0 = track.head.frame; val f1 = track.last.frame
+    var k = 0 // known(k) is the last sample at or before f
     (f0 to f1).map { f =>
-      if (byFrame.contains(f)) byFrame(f).copy(frame = f)
+      while (k + 1 < known.length && known(k + 1).frame <= f) k += 1
+      val a = known(k)
+      if (a.frame == f) a
       else {
-        val hi = known.indexWhere(_ > f); val lo = hi - 1
-        val (a, b) = (byFrame(known(lo)), byFrame(known(hi)))
+        val b = known(k + 1)
         val t = (f - a.frame).toDouble / (b.frame - a.frame)
         Det(f, a.x1 + (b.x1 - a.x1) * t, a.y1 + (b.y1 - a.y1) * t,
           a.x2 + (b.x2 - a.x2) * t, a.y2 + (b.y2 - a.y2) * t)

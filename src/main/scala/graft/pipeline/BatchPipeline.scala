@@ -1,9 +1,11 @@
 package graft.pipeline
 
 import graft.operators.{DurationEnsemble, SceneDetect, SpeakingSegments, Tracker, TrackGeometry}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable.ArrayBuffer
 
 /** The whole reference pipeline as ONE Spark DAG — the Spark-native
   * `batchProcessVideos.py` + `demoTalkNet.py main()` (SURVEY §3.1–3.2):
@@ -12,9 +14,14 @@ import org.apache.spark.sql.functions._
   *   (duration ensemble) ─ smooth ─ sessionize ─ segments + summary
   *
   * Where the reference crosses a process boundary per stage and per
-  * video (subprocess + pickle), here every stage is a DataFrame
-  * transform partitioned by video/scene — lineage replaces pickles and
-  * stage checkpoints are optional parquet writes with the same names.
+  * video (subprocess + pickle), here frames group once by video_id,
+  * the reference's unit of work, and one per-video kernel
+  * ([[scoreVideo]]) runs scenes → faces → tracks → scores: every later
+  * key only refines video_id, so no stage needs a shuffle of its own.
+  * The staged functions ([[detectFaces]], [[assignScenes]],
+  * [[scoreTracks]], `SceneDetect.detectAll`, `Tracker.trackAll`) are
+  * the per-stage Spark API over the same pure kernels. Stage
+  * checkpoints are optional parquet writes with the reference's names.
   *
   * The GPU/codec kernels (S3FD, TalkNet, ffmpeg) are pluggable traits;
   * the defaults are deterministic STUBS (weights aren't shipped in the
@@ -58,10 +65,23 @@ object BatchPipeline {
   /** Pipeline-default stub model (see DurationEnsemble.StubBatchScorer). */
   val StubScorer: SpeakerScorer = DurationEnsemble.StubBatchScorer
 
-  /** frames(video_id, frame, content) → detections with conf filter
-    * (the reference's conf gate sits inside the detector call). */
+  /** Gates: a face is kept iff conf > ConfTh; a scene of fewer than
+    * MinSceneLen frames is not tracked. */
+  val ConfTh = 0.9
+  val MinSceneLen = 11
+
+  /** One frame's faces that pass the conf gate (the reference's gate
+    * sits inside the detector call), as (det_idx, x1, y1, x2, y2, conf)
+    * with det_idx the face's index in the detector's output. */
+  def keptFaces(detector: FaceDetector, videoId: Long, frame: Int, content: Double,
+      confTh: Double = ConfTh): Seq[(Int, Double, Double, Double, Double, Double)] =
+    detector.detect(videoId, frame, content).zipWithIndex.collect {
+      case ((x1, y1, x2, y2, conf), i) if conf > confTh => (i, x1, y1, x2, y2, conf)
+    }
+
+  /** frames(video_id, frame, content) → detections with conf filter. */
   def detectFaces(spark: SparkSession, frames: DataFrame, detector: FaceDetector,
-      confTh: Double = 0.9): DataFrame = {
+      confTh: Double = ConfTh): DataFrame = {
     import spark.implicits._
     frames.select(col("video_id").cast("long"), col("frame").cast("int"),
         col("content").cast("double"))
@@ -69,18 +89,18 @@ object BatchPipeline {
       .mapPartitions { it =>
         // per-partition init point for the real model
         it.flatMap { case (v, f, c) =>
-          detector.detect(v, f, c).zipWithIndex.collect {
-            case ((x1, y1, x2, y2, conf), i) if conf > confTh => (v, f, i, x1, y1, x2, y2, conf)
+          keptFaces(detector, v, f, c, confTh).map { case (i, x1, y1, x2, y2, conf) =>
+            (v, f, i, x1, y1, x2, y2, conf)
           }
         }
       }
       .toDF("video_id", "frame", "det_idx", "x1", "y1", "x2", "y2", "conf")
   }
 
-  /** Attach scene_id to detections: broadcast the (small) scene table
-    * and range-join frame ∈ [start, end) — scenes per video are few,
-    * so this is a broadcast range join, never a shuffle of detections. */
-  def assignScenes(dets: DataFrame, scenes: DataFrame, minSceneLen: Int = 11): DataFrame = {
+  /** Attach scene_id to detections: broadcast the scene table and
+    * range-join frame ∈ [start, end). The per-video kernel does the
+    * same with a sorted walk over the video's own scenes. */
+  def assignScenes(dets: DataFrame, scenes: DataFrame, minSceneLen: Int = MinSceneLen): DataFrame = {
     val keptScenes = scenes
       .filter(col("end_frame") - col("start_frame") >= minSceneLen) // shot-length gate
       .select(col("video_id").as("s_vid"), col("scene_id"),
@@ -109,16 +129,51 @@ object BatchPipeline {
       .groupByKey(tf => (tf.video_id, tf.scene_id, tf.track_id))
       .flatMapGroups { (key: (Long, Long, Long), it: Iterator[Tracker.TrackFrame]) =>
         val rows = it.toArray.sortBy(_.frame)
-        val in = DurationEnsemble.EnsembleInput(key._1, key._3,
-          nAudioFrames = rows.length * 4, nVideoFrames = rows.length)
-        val scores = DurationEnsemble.ensemble(in, scorer)
-        // nAudio = 4·nVideo exactly → no truncation, scores align 1:1
+        val scores = trackScores(key._1, key._3, rows.length, scorer)
         rows.indices.iterator.map { j =>
           val tf = rows(j)
           (tf.video_id, tf.scene_id, tf.track_id, tf.frame, scores(j))
         }
       }
       .toDF("video_id", "scene_id", "track_id", "frame", "score")
+  }
+
+  /** Ensemble scores of one track of `n` frames, in frame order.
+    * nAudio = 4·nVideo exactly → no truncation, scores align 1:1. */
+  def trackScores(videoId: Long, trackId: Long, n: Int, scorer: SpeakerScorer): Array[Double] =
+    DurationEnsemble.ensemble(DurationEnsemble.EnsembleInput(videoId, trackId,
+      nAudioFrames = n * 4, nVideoFrames = n), scorer)
+
+  /** One scored track frame: the tracker's box and its ensemble score. */
+  final case class ScoredFrame(video_id: Long, scene_id: Long, track_id: Long, frame: Int,
+      x1: Double, y1: Double, x2: Double, y2: Double, score: Double)
+
+  /** The per-video kernel: one video's (frame, content) rows sorted by
+    * frame and its scenes [start, end) in order → scored track frames.
+    * Only frames of scenes passing the MinSceneLen gate are detected;
+    * track_id is scene-local, as in `Tracker.trackAll`. */
+  def scoreVideo(videoId: Long, frames: Array[(Int, Double)], scenes: Seq[(Int, Int)],
+      detector: FaceDetector, scorer: SpeakerScorer): Iterator[ScoredFrame] = {
+    val sceneArr = scenes.toArray
+    val perScene = Array.fill(sceneArr.length)(ArrayBuffer.empty[Tracker.Det])
+    var s = 0
+    frames.foreach { case (f, c) =>
+      while (s < sceneArr.length && sceneArr(s)._2 <= f) s += 1
+      if (s < sceneArr.length && sceneArr(s)._1 <= f &&
+          sceneArr(s)._2 - sceneArr(s)._1 >= MinSceneLen)
+        keptFaces(detector, videoId, f, c).foreach { case (_, x1, y1, x2, y2, _) =>
+          perScene(s) += Tracker.Det(f, x1, y1, x2, y2)
+        }
+    }
+    perScene.indices.iterator.flatMap { sid =>
+      Tracker.trackScene(perScene(sid).toSeq).zipWithIndex.iterator.flatMap { case (trk, tid) =>
+        val scores = trackScores(videoId, tid, trk.length, scorer)
+        trk.indices.iterator.map { j =>
+          val d = trk(j)
+          ScoredFrame(videoId, sid, tid, d.frame, d.x1, d.y1, d.x2, d.y2, scores(j))
+        }
+      }
+    }
   }
 
   /** Visualization smoothing with the reference's tail quirk
@@ -144,72 +199,50 @@ object BatchPipeline {
       .toDF("video_id", "track_id", "frame", "score", "smoothed")
   }
 
-  final case class PipelineResult(
-      scenes: DataFrame, detections: DataFrame, tracks: DataFrame,
-      procTracks: DataFrame, scores: DataFrame, segments: DataFrame,
-      summary: DataFrame)
+  /** The DAG's outputs. Each frame is planned on first use, so a caller
+    * that reads one of them (q44 reads `segments`) does not pay the
+    * analysis of the others on every call. */
+  final class PipelineResult(scenes0: => DataFrame, detections0: => DataFrame,
+      tracks0: => DataFrame, procTracks0: => DataFrame, scores0: => DataFrame,
+      segments0: => DataFrame, summary0: => DataFrame) {
+    lazy val scenes: DataFrame = scenes0
+    lazy val detections: DataFrame = detections0
+    lazy val tracks: DataFrame = tracks0
+    lazy val procTracks: DataFrame = procTracks0
+    lazy val scores: DataFrame = scores0
+    lazy val segments: DataFrame = segments0
+    lazy val summary: DataFrame = summary0
+  }
 
   /** The full DAG. `frames` = (video_id, frame, content) — the decoded
-    * canonical-media table the ffmpeg kernel would produce. Optional
-    * `checkpointDir` writes each stage as parquet with the reference's
-    * stage names (scene/faces/tracks/scores — the pckl contract).
-    * `scenesOverride` replaces the content-delta scene stage (used by
-    * [[runFromPayloads]], whose ContentDetector semantics score each
-    * frame AGAINST its predecessor rather than as a standalone
-    * content value). */
+    * canonical-media table the ffmpeg kernel would produce — grouped
+    * once by video into [[scoreVideo]], with content-delta scene cuts
+    * (`SceneDetect.detect`). Optional `checkpointDir` writes each stage
+    * as parquet with the reference's stage names
+    * (scene/faces/tracks/scores — the pckl contract). */
   def run(spark: SparkSession, frames: DataFrame,
       detector: FaceDetector = StubDetector, scorer: SpeakerScorer = StubScorer,
       threshold: Double = 0.0, minDurationS: Double = 0.2,
-      checkpointDir: Option[String] = None,
-      scenesOverride: Option[DataFrame] = None): PipelineResult = {
-
-    // Stage checkpoints are hive-partitioned by video_id (SURVEY §1.3):
-    // per-video reads (the reference's resume/debug unit) prune to one
-    // directory instead of scanning the corpus.
-    def checkpoint(df: DataFrame, name: String): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").partitionBy("video_id").parquet(s"$dir/$name")
-        spark.read.parquet(s"$dir/$name")
-      case None => df
-    }
-
+      checkpointDir: Option[String] = None): PipelineResult = {
     import spark.implicits._
-    // frames fans out to scene detection AND face detection; tracks
-    // fan out to geometry AND scoring. Without stage checkpoints the
-    // shared lineage would execute once per consumer — persist at the
-    // two fan-out points (at 100 TB the parquet stage checkpoints play
-    // this role, which is exactly the reference's pckl contract).
-    val framesIn = if (checkpointDir.isEmpty)
-      frames.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else frames
-    val scenes = checkpoint(
-      scenesOverride.getOrElse(SceneDetect.detectAll(spark, framesIn).toDF()), "scene")
-    val dets = checkpoint(detectFaces(spark, framesIn, detector), "faces")
-    val sceneDets = assignScenes(dets, scenes)
-    val tracks = Tracker.trackAll(spark, sceneDets)
-    val tracksDf0 = checkpoint(tracks.toDF(), "tracks")
-    val tracksDf = if (checkpointDir.isEmpty)
-      tracksDf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else tracksDf0
-    val proc = TrackGeometry.procTracks(spark, tracksDf).toDF()
-    val scores = checkpoint(
-      scoreTracks(spark, tracksDf.as[Tracker.TrackFrame], scorer), "scores")
-    val segments = SpeakingSegments.extract(scores,
-      threshold, minDurationS, fps = 25, keyCols = Seq("video_id", "track_id"))
-    // per-video human summary (extractSpeakingSegments.py:152–175)
-    val summary = segments.groupBy(col("video_id"))
-      .agg(countDistinct(col("track_id")).as("n_tracks"),
-        count(lit(1)).as("n_segments"),
-        sum(col("n_frames")).as("total_frames"),
-        round(sum(col("duration_s") * 1000).cast("long") / 1000.0, 3).as("total_speaking_s"))
-    PipelineResult(scenes, dets, tracksDf, proc, scores, segments, summary)
+    val scored = frames
+      .select(col("video_id").cast("long").as("video_id"), col("frame").cast("int"),
+        col("content").cast("double"))
+      .groupBy(col("video_id")).as[Long, (Long, Int, Double)]
+      .flatMapGroups { (vid: Long, it: Iterator[(Long, Int, Double)]) =>
+        val arr = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
+        scoreVideo(vid, arr, SceneDetect.detect(arr), detector, scorer)
+      }
+    finish(spark, SceneDetect.detectAll(spark, frames).toDF(),
+      detectFaces(spark, frames, detector), scored, threshold, minDurationS, checkpointDir)
   }
 
-  /** The full DAG from RAW frame payloads: scene cuts and the frames
-    * table's content column both come from the REAL ContentDetector
-    * chain (fixed-point HSV + mean-|Δ| vs the previous frame —
-    * SceneDetect.contentVals; the first frame of a video scores 0.0,
-    * the detector's no-predecessor frame). Only the payload decode
+  /** The full DAG from RAW frame payloads: scene cuts and the content
+    * the detector sees both come from the REAL ContentDetector chain
+    * (fixed-point HSV + mean-|Δ| vs the previous frame —
+    * SceneDetect.frameContents; the first frame of a video scores 0.0,
+    * the detector's no-predecessor frame), computed once per video
+    * inside the same per-video kernel group. Only the payload decode
     * remains a stub seat. `payloads` = (video_id, frame, payload). */
   def runFromPayloads(spark: SparkSession, payloads: DataFrame, h: Int = 16, w: Int = 16,
       sceneThreshold: Double = 27.0, minSceneLen: Int = 15,
@@ -218,19 +251,61 @@ object BatchPipeline {
       checkpointDir: Option[String] = None): PipelineResult = {
     import spark.implicits._
     val in = payloads
-      .select(col("video_id").cast("long"), col("frame").cast("int"),
+      .select(col("video_id").cast("long").as("video_id"), col("frame").cast("int"),
         col("payload").cast("binary"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scenes = SceneDetect.contentScenes(spark, in, h, w, sceneThreshold, minSceneLen).toDF()
-    val frames = in.as[(Long, Int, Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (vid: Long, it: Iterator[(Long, Int, Array[Byte])]) =>
-        val arr = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
-        val cv = SceneDetect.contentVals(arr, h, w).toMap
-        arr.iterator.map { case (f, _) => (vid, f, cv.getOrElse(f, 0.0)) }
-      }
+    def perVideo[T: Encoder](kernel: (Long, Array[(Int, Double)]) => Iterator[T]) =
+      in.groupBy(col("video_id")).as[Long, (Long, Int, Array[Byte])]
+        .flatMapGroups { (vid: Long, it: Iterator[(Long, Int, Array[Byte])]) =>
+          val rows = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
+          kernel(vid, SceneDetect.frameContents(rows, h, w))
+        }
+    val scored = perVideo { (vid, contents) =>
+      scoreVideo(vid, contents, SceneDetect.cuts(contents, sceneThreshold, minSceneLen),
+        detector, scorer)
+    }
+    lazy val frames = perVideo((vid, contents) => contents.iterator.map { case (f, c) => (vid, f, c) })
       .toDF("video_id", "frame", "content")
-    run(spark, frames, detector, scorer, threshold, minDurationS,
-      checkpointDir, scenesOverride = Some(scenes))
+    finish(spark,
+      SceneDetect.contentScenes(spark, in, h, w, sceneThreshold, minSceneLen).toDF(),
+      detectFaces(spark, frames, detector), scored, threshold, minDurationS, checkpointDir)
+  }
+
+  /** `tracks` and `scores` project the kernel output; `scenes` and
+    * `detections` are staged frames off the segments lineage. Stage
+    * checkpoints are hive-partitioned by video_id (SURVEY §1.3), so a
+    * per-video read (the reference's resume/debug unit) prunes. */
+  private def finish(spark: SparkSession, scenes: => DataFrame, detections: => DataFrame,
+      scored: Dataset[ScoredFrame], threshold: Double, minDurationS: Double,
+      checkpointDir: Option[String]): PipelineResult = {
+    def checkpoint(df: DataFrame, name: String): DataFrame = checkpointDir match {
+      case Some(dir) =>
+        df.write.mode("overwrite").partitionBy("video_id").parquet(s"$dir/$name")
+        spark.read.parquet(s"$dir/$name")
+      case None => df
+    }
+    // the tracks and scores checkpoints both write the kernel output
+    val out = if (checkpointDir.isDefined) scored.persist(StorageLevel.MEMORY_AND_DISK) else scored
+    lazy val tracks = checkpoint(out.select("video_id", "scene_id", "track_id", "frame",
+      "x1", "y1", "x2", "y2"), "tracks")
+    lazy val scores = checkpoint(out.select("video_id", "scene_id", "track_id", "frame",
+      "score"), "scores")
+    // Segments end on a shuffle by video: the per-track window chain
+    // runs once into it, and a consumer that reads segments twice (a
+    // global sort samples its input, then shuffles it) or groups them by
+    // video (the summary) reads the small shuffle output instead.
+    lazy val segments = SpeakingSegments.extract(scores,
+      threshold, minDurationS, fps = 25, keyCols = Seq("video_id", "track_id"))
+      .repartition(col("video_id"))
+    val r = new PipelineResult(checkpoint(scenes, "scene"), checkpoint(detections, "faces"),
+      tracks, TrackGeometry.procTracks(spark, tracks).toDF(), scores, segments,
+      // per-video human summary (extractSpeakingSegments.py:152–175)
+      segments.groupBy(col("video_id"))
+        .agg(countDistinct(col("track_id")).as("n_tracks"),
+          count(lit(1)).as("n_segments"),
+          sum(col("n_frames")).as("total_frames"),
+          round(sum(col("duration_s") * 1000).cast("long") / 1000.0, 3).as("total_speaking_s")))
+    // the stage checkpoints are written by this call, not on first read
+    if (checkpointDir.isDefined) Seq(r.scenes, r.detections, r.tracks, r.scores)
+    r
   }
 }

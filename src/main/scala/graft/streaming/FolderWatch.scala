@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Scale notes: file-source listing is incremental (maxFilesPerTrigger
   * caps per-batch work); each micro-batch parallelizes exactly like
-  * the batch DAG (scene/video partitioning); checkpointing makes the
+  * the batch DAG (one group per video); checkpointing makes the
   * watch resumable — the streaming analog of the reference's pickle
   * resume contract.
   */

@@ -79,6 +79,45 @@ class TrackerSpec extends SparkSpec {
     assert(dense(1).x1 === 1.0 && dense(3).x1 === 3.0)
   }
 
+  test("frame buckets and face removal match groupBy + indexOf on random scenes (300 cases)") {
+    // the bucketing by groupBy/sort and list.remove by indexOf, written
+    // out, as the oracle for the linear bucket scan and removeFirst
+    def byGroupBy(dets: Seq[Det], minTrack: Int): Seq[Seq[Det]] = {
+      val frames = dets.groupBy(_.frame).toVector.sortBy(_._1)
+        .map { case (_, fs) => scala.collection.mutable.ArrayBuffer(fs: _*) }
+      val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Det]]
+      var go = true
+      while (go) {
+        val track = scala.collection.mutable.ArrayBuffer.empty[Det]
+        for (ff <- frames) {
+          var idx = 0
+          var broke = false
+          while (idx < ff.length && !broke) {
+            val face = ff(idx)
+            idx += 1
+            if (track.isEmpty) { track += face; ff.remove(ff.indexOf(face)) }
+            else if (face.frame - track.last.frame <= 10) {
+              if (Tracker.iou(face, track.last) > 0.5) { track += face; ff.remove(ff.indexOf(face)) }
+            } else broke = true
+          }
+        }
+        if (track.isEmpty) go = false
+        else if (track.length > minTrack) out += Tracker.interpolate(track.toSeq)
+      }
+      out.toSeq
+    }
+    val r = new scala.util.Random(42)
+    for (_ <- 1 to 300) {
+      // 1-4 faces per frame on a coarse grid, so equal boxes recur in a
+      // frame; frames in random order, some frames empty
+      val dets = r.shuffle((0 until 40).filter(_ => r.nextInt(8) != 0).map { f =>
+        (0 until 1 + r.nextInt(4)).map(_ => box(f, r.nextInt(3) * 2.0))
+      }).flatten
+      val minTrack = r.nextInt(12)
+      assert(Tracker.trackScene(dets, minTrack = minTrack) === byGroupBy(dets, minTrack))
+    }
+  }
+
   test("distributed trackAll matches single-scene trackScene") {
     import spark.implicits._
     val dets = (0 until 15).map(f => (7L, 1L, f, 0, f * 0.5, 0.0, f * 0.5 + 10, 10.0))
