@@ -4,11 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Generates INDEX.md — the one-page query index (round-11 verdict
-  * task 8): qNNN → one-liner → declaring pack file:line → latest
+  * task 8): qNNN → one-liner → declaring pack file → latest
   * CORRECTNESS status. Derived, never hand-maintained: the name list
-  * comes from SparkEntry.queries at runtime, the file:line and
-  * one-liner from scanning the committed sources for the declaration
-  * literal, and the status from the newest CORRECTNESS_r*.json.
+  * comes from SparkEntry.queries at runtime, the file and one-liner
+  * from scanning the committed sources for the declaration literal,
+  * and the status from the newest CORRECTNESS_r*.json. No line
+  * numbers, so an edit inside a pack leaves the index as it is.
   * IndexSpec regenerates in-memory and asserts the committed file
   * matches, so the index can never drift from the code.
   */
@@ -16,11 +17,11 @@ object IndexGen {
 
   private val queryRoot = "src/main/scala/graft"
 
-  /** (file, 1-based line, one-liner) for a query's declaration: the
-    * first `"name" ->` occurrence across the source tree, with the
-    * one-liner harvested from the contiguous `//` comment block
-    * directly above it. */
-  def locate(repo: Path, name: String): (String, Int, String) = {
+  /** (file, one-liner) for a query's declaration: the first
+    * `"name" ->` occurrence across the source tree, with the one-liner
+    * harvested from the contiguous `//` comment block directly above
+    * it; ("?", "—") when no file declares it. */
+  def locate(repo: Path, name: String): (String, String) = {
     val files = Files.walk(repo.resolve(queryRoot)).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     val needle = "\"" + name + "\" ->"
@@ -39,10 +40,10 @@ object IndexGen {
         val brief = (if (brief0.length > 110) brief0.take(107) + "..." else brief0)
           .replace("|", "\\|")
         val rel = repo.relativize(f).toString
-        return (rel, i + 1, if (brief.nonEmpty) brief else "—")
+        return (rel, if (brief.nonEmpty) brief else "—")
       }
     }
-    ("?", 0, "—")
+    ("?", "—")
   }
 
   /** Newest CORRECTNESS_r*.json round number present in `repo`
@@ -90,9 +91,9 @@ object IndexGen {
     val round = pinnedRound(repo)
     val st = statuses(repo, round)
     val rows = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val (file, line, brief) = locate(repo, name)
+      val (file, brief) = locate(repo, name)
       val status = st.getOrElse(name, "new")
-      s"| $name | $brief | $file:$line | $status |"
+      s"| $name | $brief | $file | $status |"
     }
     // NOT stripMargin-built: the table rows' leading '|' would be
     // eaten as margin characters

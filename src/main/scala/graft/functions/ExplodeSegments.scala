@@ -1,67 +1,37 @@
 package graft.functions
 
+import graft.operators.SpeakingSegments
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /** `explode_segments(series, threshold, min_frames)` — a Catalyst
   * `Generator` (UDTF, the §2.9 "1→N row expander" tier): takes one
   * frame-ordered ARRAY<STRUCT<frame INT, score DOUBLE>> per track and
-  * emits one row per speaking segment, with the reference's exact
-  * semantics (extractSpeakingSegments.py:44–61 + the >= gate at
-  * :98–99): strict `score > threshold`, end-EXCLUSIVE runs over the
-  * dense frame index, trailing open run closed at the end, duration
-  * gate `(end-start) >= min_frames`.
-  *
-  * The windows-based plan (SpeakingSegments / q14 / q32) is the
-  * relational form; this generator is the kernel form — useful when
-  * the score series is already collected per track (the shape the
-  * reference's scorer hands the extractor).
+  * emits one row per speaking segment through `SpeakingSegments.scan`
+  * (extractSpeakingSegments.py:44–61 + the >= gate at :98–99; the
+  * rules are on the scan). `SpeakingSegments.extract` collects each
+  * key's series and runs this generator over it.
   */
 case class ExplodeSegments(series: Expression, threshold: Expression,
     minFrames: Expression) extends Generator with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(series, threshold, minFrames)
 
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("seg_id", LongType, nullable = false),
-    StructField("start_frame", IntegerType, nullable = false),
-    StructField("end_frame", IntegerType, nullable = false),
-    StructField("n_frames", LongType, nullable = false)))
+  override lazy val elementSchema: StructType = Encoders.product[SpeakingSegments.Segment].schema
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val arr = series.eval(input).asInstanceOf[ArrayData]
     if (arr == null) return Nil
-    val thr = threshold.eval(input).asInstanceOf[Double]
-    val minF = minFrames.eval(input).asInstanceOf[Int]
     val n = arr.numElements()
-    val out = Seq.newBuilder[InternalRow]
-    var segId = 0L
-    var start = -1
-    var prevFrame = Integer.MIN_VALUE
-    var startFrame = 0
-    var i = 0
-    while (i <= n) {
-      val speaking = i < n && {
-        val row = arr.getStruct(i, 2)
-        row.getDouble(1) > thr // strict >, :45
-      }
-      val frame = if (i < n) arr.getStruct(i, 2).getInt(0) else prevFrame + 1
-      if (speaking && start < 0) { start = i; startFrame = frame }
-      if (!speaking && start >= 0) {
-        val endFrame = prevFrame + 1 // end-exclusive, :53
-        if (endFrame - startFrame >= minF) { // >= gate, :98–99
-          segId += 1
-          out += InternalRow(segId, startFrame, endFrame, (i - start).toLong)
-        }
-        start = -1
-      }
-      prevFrame = frame
-      i += 1
-    }
-    out.result()
+    val frames = Array.tabulate(n)(i => arr.getStruct(i, 2).getInt(0))
+    val scores = Array.tabulate(n)(i => arr.getStruct(i, 2).getDouble(1))
+    SpeakingSegments.scan(frames, scores, threshold.eval(input).asInstanceOf[Double],
+        minFrames.eval(input).asInstanceOf[Int])
+      .map(g => InternalRow(g.seg_id, g.start_frame, g.end_frame, g.n_frames))
   }
 
   override protected def withNewChildrenInternal(

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
 /** Greedy IoU face-track association — the reference's `track_shot`
-  * (demoTalkNet.py:146–178) re-expressed as a per-scene
+  * (demoTalkNet.py:146–178) re-expressed as a per-video
   * `groupByKey.flatMapGroups` kernel: inherently order-dependent and
-  * greedy, so it is NOT a relational join; scenes are the parallelism
-  * unit (SURVEY §2.3 "Greedy IoU track association").
+  * greedy, so it is NOT a relational join (SURVEY §2.3 "Greedy IoU
+  * track association"). [[trackScene]] runs one scene; [[trackVideo]]
+  * numbers a video's tracks across its scenes, as the reference appends
+  * each scene's tracks to one list (demoTalkNet.py:519–531).
   *
   * Faithfully reproduced quirks (each is observable in outputs):
   *  - CPython list-iterator mutation: `frameFaces.remove(face)` inside
@@ -27,9 +29,9 @@ import scala.collection.mutable.ArrayBuffer
   *    [first..last] frame (interp1d, demoTalkNet.py:168–175) and then
   *    filtered on mean face size (demoTalkNet.py:176).
   *
-  * Scale notes: state is bounded by one scene's detections; scenes
+  * Scale notes: state is bounded by one video's detections; videos
   * partition arbitrarily across executors. No shuffle beyond the
-  * groupByKey on (video_id, scene_id).
+  * groupByKey on video_id.
   */
 object Tracker {
 
@@ -128,8 +130,17 @@ object Tracker {
     }
   }
 
+  /** One video's (scene_id, detections) in scene order → (scene_id,
+    * track_id, track), track_id numbered 0.. across the video. */
+  def trackVideo(scenes: Iterator[(Long, Seq[Det])], iouThres: Double = 0.5,
+      numFailedDet: Int = 10, minTrack: Int = 11,
+      minFaceSize: Double = 1.0): Iterator[(Long, Long, Seq[Det])] =
+    scenes.flatMap { case (sid, dets) =>
+      trackScene(dets, iouThres, numFailedDet, minTrack, minFaceSize).iterator.map(sid -> _)
+    }.zipWithIndex.map { case ((sid, trk), tid) => (sid, tid.toLong, trk) }
+
   /** Distributed entry: detections(video_id, scene_id, frame, det_idx,
-    * x1, y1, x2, y2) → interpolated track frames. */
+    * x1, y1, x2, y2) → interpolated track frames, one group per video. */
   def trackAll(spark: SparkSession, detections: DataFrame,
       iouThres: Double = 0.5, numFailedDet: Int = 10,
       minTrack: Int = 11, minFaceSize: Double = 1.0): Dataset[TrackFrame] = {
@@ -140,14 +151,13 @@ object Tracker {
         col("x1").cast("double"), col("y1").cast("double"),
         col("x2").cast("double"), col("y2").cast("double"))
       .as[(Long, Long, Int, Int, Double, Double, Double, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Int, Int, Double, Double, Double, Double)]) =>
-        val (v, s) = key
-        val dets = it.toArray.sortBy(r => (r._3, r._4))
-          .map(r => Det(r._3, r._5, r._6, r._7, r._8))
-        trackScene(dets.toSeq, iouThres, numFailedDet, minTrack, minFaceSize)
-          .zipWithIndex.iterator.flatMap { case (trk, tid) =>
-            trk.map(d => TrackFrame(v, s, tid.toLong, d.frame, d.x1, d.y1, d.x2, d.y2))
+      .groupByKey(_._1)
+      .flatMapGroups { (v: Long, it: Iterator[(Long, Long, Int, Int, Double, Double, Double, Double)]) =>
+        val scenes = it.toSeq.sortBy(r => (r._2, r._3, r._4)).groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (sid, rows) => sid -> rows.map(r => Det(r._3, r._5, r._6, r._7, r._8)) }
+        trackVideo(scenes.iterator, iouThres, numFailedDet, minTrack, minFaceSize)
+          .flatMap { case (sid, tid, trk) =>
+            trk.map(d => TrackFrame(v, sid, tid, d.frame, d.x1, d.y1, d.x2, d.y2))
           }
       }
   }

@@ -16,12 +16,13 @@ import scala.collection.mutable.ArrayBuffer
   * Where the reference crosses a process boundary per stage and per
   * video (subprocess + pickle), here frames group once by video_id,
   * the reference's unit of work, and one per-video kernel
-  * ([[scoreVideo]]) runs scenes → faces → tracks → scores: every later
-  * key only refines video_id, so no stage needs a shuffle of its own.
-  * The staged functions ([[detectFaces]], [[assignScenes]],
-  * [[scoreTracks]], `SceneDetect.detectAll`, `Tracker.trackAll`) are
-  * the per-stage Spark API over the same pure kernels. Stage
-  * checkpoints are optional parquet writes with the reference's names.
+  * ([[scoreVideo]]) runs scenes → faces → tracks → scores → segments:
+  * every later key only refines video_id, so no stage needs a shuffle
+  * of its own. The staged functions ([[detectFaces]], [[assignScenes]],
+  * [[scoreTracks]], `SceneDetect.detectAll`, `Tracker.trackAll`,
+  * `SpeakingSegments.extract`) are the per-stage Spark API over the
+  * same pure kernels. Stage checkpoints are optional parquet writes
+  * with the reference's names.
   *
   * The GPU/codec kernels (S3FD, TalkNet, ffmpeg) are pluggable traits;
   * the defaults are deterministic STUBS (weights aren't shipped in the
@@ -124,12 +125,10 @@ object BatchPipeline {
       scorer: SpeakerScorer): DataFrame = {
     import spark.implicits._
     trackFrames
-      // track_id is scene-local (Tracker.trackAll) — the scoring unit
-      // is one cropped track file, i.e. (video, scene, track)
-      .groupByKey(tf => (tf.video_id, tf.scene_id, tf.track_id))
-      .flatMapGroups { (key: (Long, Long, Long), it: Iterator[Tracker.TrackFrame]) =>
+      .groupByKey(tf => (tf.video_id, tf.track_id))
+      .flatMapGroups { (key: (Long, Long), it: Iterator[Tracker.TrackFrame]) =>
         val rows = it.toArray.sortBy(_.frame)
-        val scores = trackScores(key._1, key._3, rows.length, scorer)
+        val scores = trackScores(key._1, key._2, rows.length, scorer)
         rows.indices.iterator.map { j =>
           val tf = rows(j)
           (tf.video_id, tf.scene_id, tf.track_id, tf.frame, scores(j))
@@ -144,16 +143,22 @@ object BatchPipeline {
     DurationEnsemble.ensemble(DurationEnsemble.EnsembleInput(videoId, trackId,
       nAudioFrames = n * 4, nVideoFrames = n), scorer)
 
-  /** One scored track frame: the tracker's box and its ensemble score. */
-  final case class ScoredFrame(video_id: Long, scene_id: Long, track_id: Long, frame: Int,
-      x1: Double, y1: Double, x2: Double, y2: Double, score: Double)
+  /** One track frame: the tracker's box and its ensemble score. */
+  final case class ScoredPoint(frame: Int, x1: Double, y1: Double, x2: Double, y2: Double,
+      score: Double)
+  /** One scored track: its frames in frame order and its segments. */
+  final case class ScoredTrack(video_id: Long, scene_id: Long, track_id: Long,
+      points: Seq[ScoredPoint], segments: Seq[SpeakingSegments.Segment])
 
   /** The per-video kernel: one video's (frame, content) rows sorted by
-    * frame and its scenes [start, end) in order → scored track frames.
+    * frame and its scenes [start, end) in order → its scored tracks.
     * Only frames of scenes passing the MinSceneLen gate are detected;
-    * track_id is scene-local, as in `Tracker.trackAll`. */
+    * tracks are numbered across the video (`Tracker.trackVideo`), and
+    * each track's segments are one scan of its scores, so a segment
+    * never crosses a track or a scene cut. */
   def scoreVideo(videoId: Long, frames: Array[(Int, Double)], scenes: Seq[(Int, Int)],
-      detector: FaceDetector, scorer: SpeakerScorer): Iterator[ScoredFrame] = {
+      detector: FaceDetector, scorer: SpeakerScorer, threshold: Double,
+      minFrames: Int): Iterator[ScoredTrack] = {
     val sceneArr = scenes.toArray
     val perScene = Array.fill(sceneArr.length)(ArrayBuffer.empty[Tracker.Det])
     var s = 0
@@ -165,15 +170,16 @@ object BatchPipeline {
           perScene(s) += Tracker.Det(f, x1, y1, x2, y2)
         }
     }
-    perScene.indices.iterator.flatMap { sid =>
-      Tracker.trackScene(perScene(sid).toSeq).zipWithIndex.iterator.flatMap { case (trk, tid) =>
+    Tracker.trackVideo(perScene.indices.iterator.map(sid => sid.toLong -> perScene(sid).toSeq))
+      .map { case (sid, tid, trk) =>
         val scores = trackScores(videoId, tid, trk.length, scorer)
-        trk.indices.iterator.map { j =>
+        val points = trk.indices.map { j =>
           val d = trk(j)
-          ScoredFrame(videoId, sid, tid, d.frame, d.x1, d.y1, d.x2, d.y2, scores(j))
+          ScoredPoint(d.frame, d.x1, d.y1, d.x2, d.y2, scores(j))
         }
+        ScoredTrack(videoId, sid, tid, points,
+          SpeakingSegments.scan(trk.map(_.frame).toArray, scores, threshold, minFrames))
       }
-    }
   }
 
   /** Visualization smoothing with the reference's tail quirk
@@ -231,10 +237,11 @@ object BatchPipeline {
       .groupBy(col("video_id")).as[Long, (Long, Int, Double)]
       .flatMapGroups { (vid: Long, it: Iterator[(Long, Int, Double)]) =>
         val arr = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
-        scoreVideo(vid, arr, SceneDetect.detect(arr), detector, scorer)
+        scoreVideo(vid, arr, SceneDetect.detect(arr), detector, scorer, threshold,
+          SpeakingSegments.minFrames(minDurationS))
       }
     finish(spark, SceneDetect.detectAll(spark, frames).toDF(),
-      detectFaces(spark, frames, detector), scored, threshold, minDurationS, checkpointDir)
+      detectFaces(spark, frames, detector), scored, checkpointDir)
   }
 
   /** The full DAG from RAW frame payloads: scene cuts and the content
@@ -261,22 +268,22 @@ object BatchPipeline {
         }
     val scored = perVideo { (vid, contents) =>
       scoreVideo(vid, contents, SceneDetect.cuts(contents, sceneThreshold, minSceneLen),
-        detector, scorer)
+        detector, scorer, threshold, SpeakingSegments.minFrames(minDurationS))
     }
     lazy val frames = perVideo((vid, contents) => contents.iterator.map { case (f, c) => (vid, f, c) })
       .toDF("video_id", "frame", "content")
     finish(spark,
       SceneDetect.contentScenes(spark, in, h, w, sceneThreshold, minSceneLen).toDF(),
-      detectFaces(spark, frames, detector), scored, threshold, minDurationS, checkpointDir)
+      detectFaces(spark, frames, detector), scored, checkpointDir)
   }
 
-  /** `tracks` and `scores` project the kernel output; `scenes` and
-    * `detections` are staged frames off the segments lineage. Stage
-    * checkpoints are hive-partitioned by video_id (SURVEY §1.3), so a
-    * per-video read (the reference's resume/debug unit) prunes. */
+  /** `tracks`, `scores` and `segments` project the kernel output;
+    * `scenes` and `detections` are staged frames off the segments
+    * lineage. Stage checkpoints are hive-partitioned by video_id
+    * (SURVEY §1.3), so a per-video read (the reference's resume/debug
+    * unit) prunes. */
   private def finish(spark: SparkSession, scenes: => DataFrame, detections: => DataFrame,
-      scored: Dataset[ScoredFrame], threshold: Double, minDurationS: Double,
-      checkpointDir: Option[String]): PipelineResult = {
+      scored: Dataset[ScoredTrack], checkpointDir: Option[String]): PipelineResult = {
     def checkpoint(df: DataFrame, name: String): DataFrame = checkpointDir match {
       case Some(dir) =>
         df.write.mode("overwrite").partitionBy("video_id").parquet(s"$dir/$name")
@@ -285,17 +292,19 @@ object BatchPipeline {
     }
     // the tracks and scores checkpoints both write the kernel output
     val out = if (checkpointDir.isDefined) scored.persist(StorageLevel.MEMORY_AND_DISK) else scored
-    lazy val tracks = checkpoint(out.select("video_id", "scene_id", "track_id", "frame",
-      "x1", "y1", "x2", "y2"), "tracks")
-    lazy val scores = checkpoint(out.select("video_id", "scene_id", "track_id", "frame",
-      "score"), "scores")
-    // Segments end on a shuffle by video: the per-track window chain
-    // runs once into it, and a consumer that reads segments twice (a
-    // global sort samples its input, then shuffles it) or groups them by
-    // video (the summary) reads the small shuffle output instead.
-    lazy val segments = SpeakingSegments.extract(scores,
-      threshold, minDurationS, fps = 25, keyCols = Seq("video_id", "track_id"))
-      .repartition(col("video_id"))
+    lazy val points = out.select(col("video_id"), col("scene_id"), col("track_id"),
+      inline(col("points")))
+    lazy val tracks = checkpoint(points.drop("score"), "tracks")
+    lazy val scores = checkpoint(points.drop("x1", "y1", "x2", "y2"), "scores")
+    // Segments end on a shuffle by video: the kernel runs once into it,
+    // and a consumer that reads segments twice (a global sort samples
+    // its input, then shuffles it) or groups them by video (the
+    // summary) reads the small shuffle output instead. `inline` would
+    // infer a size filter that stops `points` being pruned from the
+    // kernel's serializer, hence inline_outer and a filter after it.
+    lazy val segments = SpeakingSegments.table(out.select(col("video_id"), col("track_id"),
+        inline_outer(col("segments"))).filter(col("seg_id").isNotNull),
+      Seq(col("video_id"), col("track_id"))).repartition(col("video_id"))
     val r = new PipelineResult(checkpoint(scenes, "scene"), checkpoint(detections, "faces"),
       tracks, TrackGeometry.procTracks(spark, tracks).toDF(), scores, segments,
       // per-video human summary (extractSpeakingSegments.py:152–175)

@@ -133,9 +133,9 @@ object AnalyticsQueries10 extends QueryPack {
           sum(expr("IF(keep, n_toks, 0L)")).as("sampled_tokens"))
         .orderBy(col("lang"))
       // pin the ≤|langs|-row result, then free the per-doc frame —
-      // the q269 pin-then-free pattern, so a multi-query session
-      // (tools/newops_probe.sh) doesn't keep a corpus-sized-per-doc
-      // cache resident after the query returns
+      // the q269 pin-then-free pattern, so a multi-query session (the
+      // round-17 new-operator probe, since removed) doesn't keep a
+      // corpus-sized-per-doc cache resident after the query returns
       out.persist().count()
       scored.unpersist()
       out

@@ -290,12 +290,12 @@ object DomainQueries extends QueryPack {
     // drift x=(frame%200)/10 never wraps (scenes are 100-aligned) so
     // consecutive present faces always chain (IoU ≥ 0.98 > 0.5) and
     // each scene yields ONE track over [first..last] present frame —
-    // gaps-and-islands, same argument as q42. Scoring uses the
-    // HashBatchScorer (the oracle-parity model q65 mirrors) on
-    // track-LOCAL indices with nAudio=4·nVideo (no truncation), and
-    // segments are q32's lag/sum windows. The sin-based StubScorer
-    // path (not SQL-mirrorable: libm sin differs across engines) stays
-    // pinned by PipelineSpec.
+    // gaps-and-islands, same argument as q42; tracks are numbered per
+    // video. Scoring uses the HashBatchScorer (the oracle-parity model
+    // q65 mirrors) on track-LOCAL indices with nAudio=4·nVideo (no
+    // truncation), then one segment scan per track. The sin-based
+    // StubScorer path (not SQL-mirrorable: libm sin differs across
+    // engines) stays pinned by PipelineSpec.
     "q44_pipeline_e2e" -> { (s, dir) =>
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ns"), col("event_id"))
       val frames = Tables.events(s, dir)
@@ -695,11 +695,11 @@ object DomainQueries extends QueryPack {
   /** Mirrors q44's pipeline on the constructed input (closed forms on
     * the query): scenes = frame//100 gated ≥ 11; detections absent iff
     * (31·vid+frame)%10==0; one track per scene over [first..last]
-    * present frame gated > 11 faces; HashBatchScorer ensemble on
-    * track-local j (nAudio = 4·nVideo ⇒ no truncation — q65's nv2 CTE
-    * degenerates away); q32's run extraction over the per-video merge
-    * (track_id is 0 for every scene, and runs are row-consecutive, so
-    * scene-boundary gaps do not split — same on both engines). */
+    * present frame gated > 11 faces, numbered per video in scene order
+    * (demoTalkNet.py:519–531); HashBatchScorer ensemble on track-local
+    * j (nAudio = 4·nVideo ⇒ no truncation — q65's nv2 CTE degenerates
+    * away); gaps-and-islands per (video_id, track_id), so no segment
+    * crosses a track (extractSpeakingSegments.py:44–61). */
   private val q44Sql = {
     def sc(d: Int) = {
       val uh = Q.uhashSql("888", "video_id*1000000+j")
@@ -717,30 +717,30 @@ object DomainQueries extends QueryPack {
        |  WHERE (video_id*31 + frame) % 10 <> 0),
        |dk AS (SELECT det.* FROM det JOIN n USING (video_id)
        |  WHERE least(100, n.nfr - 100*det.scene_id) >= 11),
-       |t AS (SELECT video_id, scene_id, min(frame) AS f0, max(frame) AS f1
-       |  FROM dk GROUP BY 1, 2 HAVING count(*) > 11),
-       |tf AS (SELECT video_id, f0, unnest(generate_series(f0, f1)) AS frame FROM t),
-       |sj AS (SELECT video_id, frame, frame - f0 AS j FROM tf),
-       |s0 AS (SELECT video_id, frame, $mean AS mean FROM sj),
-       |s1 AS (SELECT video_id, frame, $rint1 AS score FROM s0),
-       |f AS (SELECT video_id, frame,
-       |    CASE WHEN score > 0.0 THEN 1 ELSE 0 END AS speaking FROM s1),
+       |t AS (SELECT video_id, min(frame) AS f0, max(frame) AS f1,
+       |    CAST(row_number() OVER (PARTITION BY video_id ORDER BY scene_id) - 1 AS BIGINT) AS track_id
+       |  FROM dk GROUP BY video_id, scene_id HAVING count(*) > 11),
+       |tf AS (SELECT video_id, track_id, f0, unnest(generate_series(f0, f1)) AS frame FROM t),
+       |sj AS (SELECT video_id, track_id, frame, frame - f0 AS j FROM tf),
+       |s0 AS (SELECT video_id, track_id, frame, $mean AS mean FROM sj),
+       |f AS (SELECT video_id, track_id, frame,
+       |    CASE WHEN $rint1 > 0.0 THEN 1 ELSE 0 END AS speaking FROM s0),
        |c AS (SELECT *,
        |  CASE WHEN lag(speaking) OVER w IS NULL OR lag(speaking) OVER w <> speaking
        |       THEN 1 ELSE 0 END AS changed
-       |  FROM f WINDOW w AS (PARTITION BY video_id ORDER BY frame)),
+       |  FROM f WINDOW w AS (PARTITION BY video_id, track_id ORDER BY frame)),
        |g AS (SELECT *,
-       |  CAST(sum(changed) OVER (PARTITION BY video_id ORDER BY frame
+       |  CAST(sum(changed) OVER (PARTITION BY video_id, track_id ORDER BY frame
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS grp
        |  FROM c),
-       |runs AS (SELECT video_id, grp,
+       |runs AS (SELECT video_id, track_id, grp,
        |    CAST(min(frame) AS INT) AS start_frame,
        |    CAST(max(frame) + 1 AS BIGINT) AS end_frame,
        |    count(*) AS n_frames
-       |  FROM g WHERE speaking = 1 GROUP BY 1, 2
+       |  FROM g WHERE speaking = 1 GROUP BY 1, 2, 3
        |  HAVING max(frame) + 1 - min(frame) >= 5)
-       |SELECT video_id, CAST(0 AS BIGINT) AS track_id,
-       |  CAST(row_number() OVER (PARTITION BY video_id ORDER BY start_frame) AS BIGINT) AS seg_id,
+       |SELECT video_id, track_id,
+       |  CAST(row_number() OVER (PARTITION BY video_id, track_id ORDER BY start_frame) AS BIGINT) AS seg_id,
        |  start_frame, end_frame, n_frames,
        |  CAST(start_frame AS DOUBLE)/25 AS start_s,
        |  CAST(end_frame AS DOUBLE)/25 AS end_s,

@@ -302,29 +302,14 @@ object EventStream {
     * advances with nothing arriving — under sentinelReplay eviction is
     * driven by the sentinel BATCHES themselves (batch N+1 applies
     * batch N's watermark), so the extra empty batches only add
-    * state-store commit rounds; they are disabled for the run. */
+    * state-store commit rounds; they are disabled for the run, and
+    * each stateful operator gets 2 state stores. */
   private def runDrained(spark: SparkSession, name: String,
       df: DataFrame): DataFrame = {
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val oldNoData = spark.conf.getOption(noDataKey)
     spark.conf.set(noDataKey, "false")
-    // Measurement knob (round-16 optimization A/B): the drained
-    // replays' state-partition count, overridable per session so one
-    // JVM can compare counts under the same regime. Results are
-    // partition-count independent (deterministic join/agg semantics;
-    // the sink is batch-aggregated after the drain); only the number
-    // of state stores per stateful operator changes. Default 2 — the shipped,
-    // driver-comparable value.
-    val drainParts = spark.conf.getOption("graft.drain.statePartitions")
-      .map { v =>
-        val n = scala.util.Try(v.trim.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft.drain.statePartitions must be a positive int, got '$v'"))
-        require(n >= 1,
-          s"graft.drain.statePartitions must be >= 1, got '$v'")
-        n
-      }.getOrElse(2)
-    try withStatePartitions(spark, drainParts) {
+    try withStatePartitions(spark, 2) {
       val q = df.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       try q.processAllAvailable()

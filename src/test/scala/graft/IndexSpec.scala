@@ -22,7 +22,7 @@ class IndexSpec extends AnyFunSuite {
     val lines = Files.readString(repo.resolve("INDEX.md")).linesIterator.toSeq
     val rows = lines.filter(_.matches("\\| q\\d.*")) // not the "| query |" header
     assert(rows.size == SparkEntry.queries.size)
-    assert(!rows.exists(_.contains("| ?:0 |")), "unlocated query in index")
+    assert(!rows.exists(_.contains("| ? |")), "unlocated query in index")
   }
 
   // The round-13 failure mode: the driver drops a NEWER, untracked

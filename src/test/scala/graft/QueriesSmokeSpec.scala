@@ -171,11 +171,9 @@ class QueriesSmokeSpec extends SparkSpec {
       "equality — exactly 1 row"),
     "q255_random_projection" -> (2, "single query vector (vec_id = 0), " +
       "inlined by both the exact and the projected top-k legs"),
-    "q44_pipeline_e2e" -> (1, "keptScenes = the batch's shot list; the " +
-      "reference pipeline (demoTalkNet) processes one video batch per " +
-      "run — shots-per-batch bounded, not corpus-bounded"),
     "q259_dynamic_pruning" -> (1, "the pruning dim is the batch's scene " +
-      "list — same per-batch bound as q44"),
+      "list; the reference pipeline (demoTalkNet) processes one video " +
+      "batch per run — shots-per-batch bounded, not corpus-bounded"),
     "q86_bm25" -> (1, "dfreq groups by word AFTER isin(4 literal query " +
       "terms) — ≤4 rows by the filter's literal domain"),
     "q87_colocated_join" -> (1, "the segment lookup maps the 5-value " +

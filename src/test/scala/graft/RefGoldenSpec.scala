@@ -1,7 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.operators.Eval
+import graft.operators.{Eval, SpeakingSegments}
 import org.apache.spark.sql.functions._
 
 /** REFERENCE-DERIVED goldens — outputs computed by executing the
@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   *  - ref_segments_golden.json: the real find_speaking_segments +
   *    min-duration filter from extractSpeakingSegments.py via
   *    tools/gen_ref_segments_golden.py; pins
-  *    SpeakingSegments.extract (thresholding, end-exclusive bounds,
-  *    trailing-run append, int-truncated min frames);
+  *    SpeakingSegments.extract and its scan (thresholding,
+  *    end-exclusive bounds, trailing-run append, int-truncated min
+  *    frames);
   *  - ref_runeval_golden.json: the reference evaluator chain run on
   *    q71's exact sf0.001 gt/pred derivation via
   *    tools/gen_ref_runeval_golden.py; pins the COMPLETE
@@ -115,10 +116,11 @@ class RefGoldenSpec extends SparkSpec {
     val golden = new ObjectMapper().readTree(url)
     (0 until golden.size()).foreach { i =>
       val c = golden.get(i)
-      val scores = series(c.get("case").asText, c.get("n").asInt).zipWithIndex
+      val xs = series(c.get("case").asText, c.get("n").asInt)
+      val scores = xs.zipWithIndex
         .map { case (s, f) => (1L, 0L, f, s) }
         .toDF("video_id", "track_id", "frame", "score")
-      val got = graft.operators.SpeakingSegments
+      val got = SpeakingSegments
         .extract(scores, c.get("threshold").asDouble, c.get("min_duration").asDouble)
         .orderBy("start_frame")
         .select("start_frame", "end_frame").collect()
@@ -127,8 +129,13 @@ class RefGoldenSpec extends SparkSpec {
         val s = c.get("segments").get(j)
         (s.get(0).asInt, s.get(1).asLong)
       }
-      assert(got === exp, s"case ${c.get("case").asText} th=${c.get("threshold")} " +
-        s"minDur=${c.get("min_duration")}")
+      val what = s"case ${c.get("case").asText} th=${c.get("threshold")} " +
+        s"minDur=${c.get("min_duration")}"
+      assert(got === exp, what)
+      val scanned = SpeakingSegments.scan(xs.indices.toArray, xs.toArray,
+        c.get("threshold").asDouble, SpeakingSegments.minFrames(c.get("min_duration").asDouble, 25))
+      assert(scanned.map(g => (g.start_frame, g.end_frame.toLong)) === exp, s"scan: $what")
+      assert(scanned.map(_.seg_id) === (1L to exp.size.toLong), s"scan seg_id: $what")
     }
   }
 
