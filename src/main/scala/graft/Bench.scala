@@ -10,28 +10,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Run.cpus
-    // Ladder-only scaling knob (round-11 verdict task 3): the driver
-    // contract pins shuffle partitions to the core count, which at
-    // rung 2 (sf10, ~1.7 GB parquet / ~60 M lineitem rows) makes
-    // every shuffle partition 10× its rung-1 size — hash aggs spill
-    // and the measured inflation on q158/q168/q173 was resourcing,
-    // not plan shape. With SPARK_GRAFT_SCALE_PARTITIONS=1 the
-    // partition count scales with input bytes at ~8 MB of COMPRESSED
-    // parquet per shuffle partition (≈128 MB in-flight once ~4×
-    // parquet compression and ~4× row-object expansion are paid —
-    // the cluster-default sizing rule applied to what actually fills
-    // memory), never below the core count. The driver's contract run
-    // does not set it, so sf0.1 numbers stay comparable across rounds.
-    val shufflePartitions =
-      if (sys.env.get("SPARK_GRAFT_SCALE_PARTITIONS").contains("1")) {
-        // listFiles() is null for an unreadable or race-deleted dir
-        def dirBytes(p: java.io.File): Long =
-          if (p.isDirectory)
-            Option(p.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
-          else p.length()
-        val bytes = dirBytes(new java.io.File(sfDir))
-        math.max(cpus, (bytes / (8L << 20)).toInt + 1)
-      } else cpus
+    // listFiles() is null for an unreadable or race-deleted dir
+    def dirBytes(p: java.io.File): Long =
+      if (p.isDirectory) Option(p.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
+      else p.length()
+    val shufflePartitions = Bench.shufflePartitions(cpus, dirBytes(new java.io.File(sfDir)))
     val spark = Run.session(cpus, shufflePartitions)
 
     // Sink/roundtrip scratch → tmpfs ONLY on explicit opt-in
@@ -126,6 +109,14 @@ object Bench {
     println(contractLine(best.toSeq, scratchRegime, sfDir))
     spark.stop()
   }
+
+  /** Shuffle partitions for an input of `bytes`: one per ~8 MB of
+    * compressed parquet (≈128 MB in memory after ~4× decompression and
+    * ~4× row-object expansion), never below the core count. Up to
+    * sf0.1 (17.5 MB → 3) that is the core count; on the scale ladder
+    * it keeps hash aggregations from spilling. */
+  def shufflePartitions(cpus: Int, bytes: Long): Int =
+    math.max(cpus, (bytes / (8L << 20)).toInt + 1)
 
   /** The driver's contract line for per-query results (None = the
     * query failed).

@@ -81,14 +81,7 @@ final class TalkNetModel(ws: WeightStore) extends Serializable {
     val t = mfcc.length
     require(t > 0, "audioFrontend: empty slice")
     val nCoef = mfcc(0).length
-    val data = new Array[Double](nCoef * t)
-    var i = 0
-    while (i < t) {
-      var j = 0
-      while (j < nCoef) { data(j * t + i) = mfcc(i)(j); j += 1 }
-      i += 1
-    }
-    var x = Tensor(Array(1, nCoef, t), data)
+    var x = transpose(Tensor(Array(t, nCoef), mfcc.flatten)).reshape(1, nCoef, t)
     x = conv2d(x, ws.tensor("audioEncoder.conv1.weight", 16, 1, 7, 7), None,
       strideH = 2, strideW = 1, padH = 3, padW = 3)
     x = relu(bn("audioEncoder.bn1", x))
@@ -107,20 +100,7 @@ final class TalkNetModel(ws: WeightStore) extends Serializable {
     }
     // mean over the frequency axis (audioEncoder.py:104) → T'×128
     val Array(c, f, tt) = x.shape
-    val out = new Array[Double](tt * c)
-    var ch = 0
-    while (ch < c) {
-      var k = 0
-      while (k < tt) {
-        var s = 0.0
-        var fr = 0
-        while (fr < f) { s += x.data((ch * f + fr) * tt + k); fr += 1 }
-        out(k * c + ch) = s / f
-        k += 1
-      }
-      ch += 1
-    }
-    Tensor(Array(tt, c), out)
+    transpose(avgPool2d(x, f, 1, 1, 1).reshape(c, tt))
   }
 
   // ------------------------------------------------------------ visual
@@ -217,24 +197,15 @@ final class TalkNetModel(ws: WeightStore) extends Serializable {
 
   /** visualTCN + visualConv1D (talkNetModel.py:35–37): T×512 → T×128. */
   def visualTemporal(feat: Tensor): Tensor = {
-    val Array(t, d) = feat.shape
-    // transpose to C×L for the conv stacks
-    val cl = new Array[Double](d * t)
-    var i = 0
-    while (i < t) { var j = 0; while (j < d) { cl(j * t + i) = feat.data(i * d + j); j += 1 }; i += 1 }
-    var x = Tensor(Array(d, t), cl)
+    // C×L for the conv stacks
+    var x = transpose(feat)
     (0 until 5).foreach(k => x = dsConv(s"visualTCN.net.$k", x))
     x = conv1d(x, ws.tensor("visualConv1D.net.0.weight", 256, 512, 5),
       Some(ws.vector("visualConv1D.net.0.bias", 256)), pad = 2)
     x = relu(bn("visualConv1D.net.1", x))
     x = conv1d(x, ws.tensor("visualConv1D.net.3.weight", 128, 256, 1),
       Some(ws.vector("visualConv1D.net.3.bias", 128)))
-    // back to T×128
-    val Array(c, tt) = x.shape
-    val out = new Array[Double](tt * c)
-    var k = 0
-    while (k < tt) { var j = 0; while (j < c) { out(k * c + j) = x.data(j * tt + k); j += 1 }; k += 1 }
-    Tensor(Array(tt, c), out)
+    transpose(x) // back to T×128
   }
 
   // ------------------------------------------------------------ attention
@@ -274,15 +245,8 @@ final class TalkNetModel(ws: WeightStore) extends Serializable {
     val v = cut(embedV0)
     val aC = attention("crossA2V", a, v, 128)
     val vC = attention("crossV2A", v, a, 128)
-    val cat = new Array[Double](t * 256)
-    var i = 0
-    while (i < t) {
-      System.arraycopy(aC.data, i * 128, cat, i * 256, 128)
-      System.arraycopy(vC.data, i * 128, cat, i * 256 + 128, 128)
-      i += 1
-    }
-    val av = attention("selfAV", Tensor(Array(t, 256), cat),
-      Tensor(Array(t, 256), cat), 256)
+    val cat = catCols(Seq(aC, vC))
+    val av = attention("selfAV", cat, cat, 256)
     val logits = linear(av, ws.tensor("lossAV.FC.weight", 2, 256),
       Some(ws.vector("lossAV.FC.bias", 2)))
     Array.tabulate(t)(k => logits.data(k * 2 + 1))

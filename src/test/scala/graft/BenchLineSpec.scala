@@ -46,4 +46,15 @@ class BenchLineSpec extends AnyFunSuite {
     assert(j.get("failed").size == failed.size)
     assert(j.get("value").asDouble == 1.0)
   }
+
+  test("shuffle partitions: ~8 MiB of input each, never below the core count") {
+    val sf01 = 17508506L   // sf0.1's parquet bytes
+    val sf1 = 10 * sf01    // sf1, ten times the rows
+    assert(Bench.shufflePartitions(1, sf01) == 3)
+    assert(Bench.shufflePartitions(3, sf01) == 3)
+    assert(Bench.shufflePartitions(4, sf01) == 4)
+    assert(Bench.shufflePartitions(32, sf01) == 32)
+    assert(Bench.shufflePartitions(4, sf1) == 21)
+    assert(Bench.shufflePartitions(32, sf1) == 32)
+  }
 }
