@@ -98,12 +98,17 @@ object DurationEnsemble {
     * Rows-only path (q44); no SQL mirror needed. */
   object StubBatchScorer extends BatchScorer {
     override def scoreBatch(in: EnsembleInput, duration: Int, batchIdx: Int,
-        aLo: Int, aHi: Int, vLo: Int, vHi: Int): Array[Double] =
-      Array.tabulate(vHi - vLo) { j =>
+        aLo: Int, aHi: Int, vLo: Int, vHi: Int): Array[Double] = {
+      val out = new Array[Double](vHi - vLo)
+      var j = 0
+      while (j < out.length) {
         val f = vLo + j
-        math.sin((f + in.videoId * 13.0 + in.trackId * 7.0) / 10.0) * 0.8 +
+        out(j) = math.sin((f + in.videoId * 13.0 + in.trackId * 7.0) / 10.0) * 0.8 +
           (duration - 3.5) * 0.01 + batchIdx * 0.002
+        j += 1
       }
+      out
+    }
   }
 
   /** Universal-hash index for the oracle-parity scorer — disjoint from
@@ -120,12 +125,16 @@ object DurationEnsemble {
     override def scoreBatch(in: EnsembleInput, duration: Int, batchIdx: Int,
         aLo: Int, aHi: Int, vLo: Int, vHi: Int): Array[Double] = {
       val (a, b) = D.affine(ScoreHashIdx)
-      Array.tabulate(vHi - vLo) { j =>
+      val out = new Array[Double](vHi - vLo)
+      var j = 0
+      while (j < out.length) {
         val f = vLo + j
         val h = (a * (in.videoId * 1000000L + f) + b) % P32
-        (h % 2000L - 1000L) / 1000.0 +
+        out(j) = (h % 2000L - 1000L) / 1000.0 +
           (duration - 3.5) * 0.01 + (batchIdx * 37 % 10) * 0.001
+        j += 1
       }
+      out
     }
   }
 }

@@ -18,10 +18,10 @@ object SceneDetect {
 
   final case class Scene(video_id: Long, scene_id: Long, start_frame: Int, end_frame: Int)
 
-  /** Sequential cut detection over one video's (frame, content) series. */
-  def detect(contents: Array[(Int, Double)], threshold: Double = 27.0,
+  /** Sequential cut detection over one video's (frame, content) series
+    * in frame order. */
+  def detect(sorted: Array[(Int, Double)], threshold: Double = 27.0,
       minSceneLen: Int = 15): Seq[(Int, Int)] = {
-    val sorted = contents.sortBy(_._1)
     if (sorted.isEmpty) return Seq.empty
     val first = sorted.head._1
     val end = sorted.last._1 + 1
@@ -53,7 +53,7 @@ object SceneDetect {
       .as[(Long, Int, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (vid: Long, it: Iterator[(Long, Int, Double)]) =>
-        val arr = it.map(r => (r._2, r._3)).toArray
+        val arr = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
         detect(arr, threshold, minSceneLen).zipWithIndex.iterator.map {
           case ((s, e), i) => Scene(vid, i.toLong, s, e)
         }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.operators.{DurationEnsemble, SceneDetect, SpeakingSegments, Tracker, TrackGeometry}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,17 +14,25 @@ import scala.collection.mutable.ArrayBuffer
   *   (duration ensemble) ─ smooth ─ sessionize ─ segments + summary
   *
   * Where the reference crosses a process boundary per stage and per
-  * video (subprocess + pickle), here frames group once by video_id,
-  * the reference's unit of work, and one per-video kernel
+  * video (subprocess + pickle), here rows group once by video_id, the
+  * reference's unit of work — one hash exchange, whose grouping sort
+  * also orders each video's rows — and one per-video kernel
   * ([[scoreVideo]]) runs scenes → faces → tracks → scores → segments:
   * every later key only refines video_id, so no stage needs a shuffle
-  * of its own. The staged functions ([[detectFaces]], [[assignScenes]],
-  * [[scoreTracks]], `SceneDetect.detectAll`, `Tracker.trackAll`,
+  * of its own. Three entries feed that kernel: [[run]] takes numbered
+  * frames, [[runStream]] numbers each video's stream rows 0.. in
+  * order as decoding does and takes content from the [[FrameDecoder]]
+  * seat (q44), [[runFromPayloads]] computes content from raw payloads.
+  * Segments leave the kernel through one single-partition exchange,
+  * so a global sort of them is one task. The staged functions
+  * ([[detectFaces]], [[assignScenes]], [[scoreTracks]],
+  * `SceneDetect.detectAll`, `Tracker.trackAll`,
   * `SpeakingSegments.extract`) are the per-stage Spark API over the
   * same pure kernels. Stage checkpoints are optional parquet writes
   * with the reference's names.
   *
-  * The GPU/codec kernels (S3FD, TalkNet, ffmpeg) are pluggable traits;
+  * The GPU/codec kernels (S3FD, TalkNet, ffmpeg) are pluggable traits
+  * ([[FaceDetector]], [[SpeakerScorer]], [[FrameDecoder]]);
   * the defaults are deterministic STUBS (weights aren't shipped in the
   * reference repo either — demoTalkNet.py:58–61 downloads them), so the
   * pipeline is testable end-to-end; swap in real kernels per executor
@@ -61,6 +69,20 @@ object BatchPipeline {
       val conf = 0.90 + ((videoId * 31 + frame) % 10) / 100.0
       Seq((x, 10.0, x + 20.0, 25.0, conf))
     }
+  }
+
+  /** Pluggable frame decoder (ffmpeg's seat in [[runStream]]): the
+    * content of a video's frame `frame`, decoded from its stream row
+    * `packet`. (`Media.FrameDecoder` is the whole-file decoder behind
+    * the v2 frame source.) */
+  trait FrameDecoder extends Serializable {
+    def decode(videoId: Long, frame: Int, packet: Row): Double
+  }
+
+  /** STUB decoder: a content jump of 80 every 100 frames, so a video
+    * cuts into 100-frame scenes; the packet is not read. */
+  object StubDecoder extends FrameDecoder {
+    def decode(videoId: Long, frame: Int, packet: Row): Double = (frame / 100) * 80.0 + 10.0
   }
 
   /** Pipeline-default stub model (see DurationEnsemble.StubBatchScorer). */
@@ -231,15 +253,41 @@ object BatchPipeline {
       threshold: Double = 0.0, minDurationS: Double = 0.2,
       checkpointDir: Option[String] = None): PipelineResult = {
     import spark.implicits._
-    val scored = frames
-      .select(col("video_id").cast("long").as("video_id"), col("frame").cast("int"),
-        col("content").cast("double"))
-      .groupBy(col("video_id")).as[Long, (Long, Int, Double)]
-      .flatMapGroups { (vid: Long, it: Iterator[(Long, Int, Double)]) =>
-        val arr = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
-        scoreVideo(vid, arr, SceneDetect.detect(arr), detector, scorer, threshold,
-          SpeakingSegments.minFrames(minDurationS))
-      }
+    val in = frames.select(col("video_id").cast("long").as("video_id"),
+      col("frame").cast("int").as("frame"), col("content").cast("double").as("content"))
+    val scored = perVideo(in, col("frame")) { (vid, it: Iterator[(Long, Int, Double)]) =>
+      val arr = it.map(r => (r._2, r._3)).toArray
+      scoreVideo(vid, arr, SceneDetect.detect(arr), detector, scorer, threshold,
+        SpeakingSegments.minFrames(minDurationS))
+    }
+    finish(spark, SceneDetect.detectAll(spark, frames).toDF(),
+      detectFaces(spark, frames, detector), scored, checkpointDir)
+  }
+
+  /** The full DAG from a video's STREAM rows, the way decoding numbers
+    * frames (batchProcessVideos.py:93–124): each video's rows, in
+    * `order`, are its frames 0, 1, …, and the [[FrameDecoder]] seat
+    * gives each frame's content from its row. Then the same kernel
+    * and outputs as [[run]]. `rows` has a `video_id` column and the
+    * columns `order` and the decoder read. */
+  def runStream(spark: SparkSession, rows: DataFrame, order: Seq[Column],
+      decoder: FrameDecoder = StubDecoder,
+      detector: FaceDetector = StubDetector, scorer: SpeakerScorer = StubScorer,
+      threshold: Double = 0.0, minDurationS: Double = 0.2,
+      checkpointDir: Option[String] = None): PipelineResult = {
+    import spark.implicits._
+    val in = rows.withColumn("video_id", col("video_id").cast("long"))
+    implicit val packet: Encoder[Row] = Encoders.row(in.schema)
+    def decoded(vid: Long, it: Iterator[Row]): Array[(Int, Double)] =
+      it.zipWithIndex.map { case (p, f) => (f, decoder.decode(vid, f, p)) }.toArray
+    val scored = perVideo(in, order: _*) { (vid, it: Iterator[Row]) =>
+      val arr = decoded(vid, it)
+      scoreVideo(vid, arr, SceneDetect.detect(arr), detector, scorer, threshold,
+        SpeakingSegments.minFrames(minDurationS))
+    }
+    lazy val frames = perVideo(in, order: _*) { (vid, it: Iterator[Row]) =>
+      decoded(vid, it).iterator.map { case (f, c) => (vid, f, c) }
+    }.toDF("video_id", "frame", "content")
     finish(spark, SceneDetect.detectAll(spark, frames).toDF(),
       detectFaces(spark, frames, detector), scored, checkpointDir)
   }
@@ -257,25 +305,31 @@ object BatchPipeline {
       threshold: Double = 0.0, minDurationS: Double = 0.2,
       checkpointDir: Option[String] = None): PipelineResult = {
     import spark.implicits._
-    val in = payloads
-      .select(col("video_id").cast("long").as("video_id"), col("frame").cast("int"),
-        col("payload").cast("binary"))
-    def perVideo[T: Encoder](kernel: (Long, Array[(Int, Double)]) => Iterator[T]) =
-      in.groupBy(col("video_id")).as[Long, (Long, Int, Array[Byte])]
-        .flatMapGroups { (vid: Long, it: Iterator[(Long, Int, Array[Byte])]) =>
-          val rows = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
-          kernel(vid, SceneDetect.frameContents(rows, h, w))
-        }
-    val scored = perVideo { (vid, contents) =>
-      scoreVideo(vid, contents, SceneDetect.cuts(contents, sceneThreshold, minSceneLen),
+    val in = payloads.select(col("video_id").cast("long").as("video_id"),
+      col("frame").cast("int").as("frame"), col("payload").cast("binary").as("payload"))
+    def contents(it: Iterator[(Long, Int, Array[Byte])]): Array[(Int, Double)] =
+      SceneDetect.frameContents(it.map(r => (r._2, r._3)).toArray, h, w)
+    val scored = perVideo(in, col("frame")) { (vid, it: Iterator[(Long, Int, Array[Byte])]) =>
+      val arr = contents(it)
+      scoreVideo(vid, arr, SceneDetect.cuts(arr, sceneThreshold, minSceneLen),
         detector, scorer, threshold, SpeakingSegments.minFrames(minDurationS))
     }
-    lazy val frames = perVideo((vid, contents) => contents.iterator.map { case (f, c) => (vid, f, c) })
-      .toDF("video_id", "frame", "content")
+    lazy val frames = perVideo(in, col("frame")) { (vid, it: Iterator[(Long, Int, Array[Byte])]) =>
+      contents(it).iterator.map { case (f, c) => (vid, f, c) }
+    }.toDF("video_id", "frame", "content")
     finish(spark,
       SceneDetect.contentScenes(spark, in, h, w, sceneThreshold, minSceneLen).toDF(),
       detectFaces(spark, frames, detector), scored, checkpointDir)
   }
+
+  /** The one per-video grouping of every entry: `rows` hash-partitioned
+    * by `video_id`, each video's rows handed to `kernel` sorted by
+    * `order` — Spark's grouping sort does the ordering, so no kernel
+    * sorts its input. */
+  private def perVideo[V: Encoder, T: Encoder](rows: DataFrame, order: Column*)(
+      kernel: (Long, Iterator[V]) => Iterator[T]): Dataset[T] =
+    rows.groupBy(col("video_id")).as[Long, V](Encoders.scalaLong, implicitly[Encoder[V]])
+      .flatMapSortedGroups(order: _*)(kernel)
 
   /** `tracks`, `scores` and `segments` project the kernel output;
     * `scenes` and `detections` are staged frames off the segments
@@ -296,15 +350,16 @@ object BatchPipeline {
       inline(col("points")))
     lazy val tracks = checkpoint(points.drop("score"), "tracks")
     lazy val scores = checkpoint(points.drop("x1", "y1", "x2", "y2"), "scores")
-    // Segments end on a shuffle by video: the kernel runs once into it,
-    // and a consumer that reads segments twice (a global sort samples
-    // its input, then shuffles it) or groups them by video (the
-    // summary) reads the small shuffle output instead. `inline` would
-    // infer a size filter that stops `points` being pruned from the
-    // kernel's serializer, hence inline_outer and a filter after it.
+    // Segments end on a shuffle into ONE partition: the kernel runs
+    // once into it, and a consumer that reads segments twice (the
+    // summary) or sorts them (q44's global orderBy) reads the small
+    // shuffle output, with no range-sampling job and no second
+    // exchange. Segments are a few percent of the frames. `inline`
+    // would infer a size filter that stops `points` being pruned from
+    // the kernel's serializer, hence inline_outer and a filter after it.
     lazy val segments = SpeakingSegments.table(out.select(col("video_id"), col("track_id"),
         inline_outer(col("segments"))).filter(col("seg_id").isNotNull),
-      Seq(col("video_id"), col("track_id"))).repartition(col("video_id"))
+      Seq(col("video_id"), col("track_id"))).repartition(1)
     val r = new PipelineResult(checkpoint(scenes, "scene"), checkpoint(detections, "faces"),
       tracks, TrackGeometry.procTracks(spark, tracks).toDF(), scores, segments,
       // per-video human summary (extractSpeakingSegments.py:152–175)

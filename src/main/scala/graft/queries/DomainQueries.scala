@@ -281,7 +281,11 @@ object DomainQueries extends QueryPack {
 
     // The WHOLE reference pipeline as one DAG (scenes → faces → tracks
     // → geometry → ensemble scores → segments), stub kernels, driven by
-    // an events-derived synthetic frame table; returns the segments.
+    // the events table as a video stream: a user's events, in
+    // (ts_ns, event_id) order, are a video's frames, numbered 0.. inside
+    // the per-video kernel (BatchPipeline.runStream) as decoding numbers
+    // them — no Spark window; the stub decoder's content jumps 80 every
+    // 100 frames; returns the segments, sorted in one task.
     // Under the ORACLE gate: on this input every pipeline stage has a
     // relational closed form — scene cuts land exactly at frame%100==0
     // (content jumps 80 > threshold 27, scene len 100 ≥ minSceneLen),
@@ -297,13 +301,9 @@ object DomainQueries extends QueryPack {
     // StubScorer path (not SQL-mirrorable: libm sin differs across
     // engines) stays pinned by PipelineSpec.
     "q44_pipeline_e2e" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ns"), col("event_id"))
-      val frames = Tables.events(s, dir)
-        .withColumn("frame", (row_number().over(w) - 1).cast("int"))
-        .select(col("user_id").as("video_id"), col("frame"),
-          // a content cut every 100 frames → multi-scene videos
-          (floor(col("frame") / 100) * 80.0 + 10.0).as("content"))
-      graft.pipeline.BatchPipeline.run(s, frames,
+      val stream = Tables.events(s, dir)
+        .select(col("user_id").as("video_id"), col("ts_ns"), col("event_id"))
+      graft.pipeline.BatchPipeline.runStream(s, stream, Tables.eventsOrder,
           scorer = graft.operators.DurationEnsemble.HashBatchScorer).segments
         .orderBy(col("video_id"), col("track_id"), col("seg_id"))
     },

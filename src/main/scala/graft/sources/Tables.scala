@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Canonical readers for the driver's parquet tables (TESTDATA.md).
   *
@@ -10,14 +11,14 @@ import org.apache.spark.sql.functions._
   * apply — callers `select`/`filter` and the scan narrows accordingly.
   * Nothing is cached or collected here.
   *
-  * `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4 refuses to
-  * read by default (PARQUET_TYPE_ILLEGAL). We flip
-  * `spark.sql.legacy.parquet.nanosAsLong` and surface the column as
-  * `ts_ns: LongType` (epoch nanoseconds — exactly DuckDB's
-  * `epoch_ns(ts)`, which keeps oracle comparisons integer-exact) plus a
-  * microsecond-precision `ts` TimestampType for event-time operators.
-  * The driver's generator emits whole-microsecond values, so no
-  * precision is lost in `ts`.
+  * `events.ts` has shipped as parquet TIMESTAMP(NANOS), which Spark 4
+  * refuses to read by default (PARQUET_TYPE_ILLEGAL), and as
+  * TIMESTAMP(MICROS) with no zone, which Spark reads as TIMESTAMP_NTZ;
+  * [[events]] surfaces either as `ts_ns: LongType` (epoch nanoseconds —
+  * exactly DuckDB's `epoch_ns(ts)`, which keeps oracle comparisons
+  * integer-exact) plus a microsecond-precision `ts` TimestampType for
+  * event-time operators. The generators emit whole-microsecond values,
+  * so no precision is lost in `ts`.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -50,30 +51,45 @@ object Tables {
     *
     * Schema-adaptive: the driver's generator has shipped `ts` both as
     * parquet TIMESTAMP(NANOS) (read as an epoch-ns long via
-    * `nanosAsLong`) and as plain TIMESTAMP(MICROS) (read as
-    * TIMESTAMP_NTZ). Either way the surfaced contract is identical:
-    * `ts_ns` is whole-microsecond epoch nanoseconds — exactly DuckDB's
-    * `epoch_ns(ts)`, which is µs-precision for both physical types, so
-    * every derived integer (gaps, durations, bounds) stays bit-equal
-    * to the oracle — and `ts` is a µs TimestampType (the NTZ cast is
-    * instant-preserving under the session's UTC timezone). Truncation
-    * to whole µs is monotone, so orderings are unaffected.
+    * `nanosAsLong`) and as TIMESTAMP(MICROS). Either way the surfaced
+    * contract is identical: `ts_ns` is whole-microsecond epoch
+    * nanoseconds — exactly DuckDB's `epoch_ns(ts)`, which is
+    * µs-precision for both physical types, so every derived integer
+    * (gaps, durations, bounds) stays bit-equal to the oracle — and
+    * `ts` is a µs TimestampType. Truncation to whole µs is monotone,
+    * so orderings are unaffected.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = spark.read.schema(eventsSchema(spark, sfDir)).parquet(s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) file
+      case LongType => // TIMESTAMP(NANOS) file
         raw.withColumnRenamed("ts", "ts_ns")
           .withColumn("ts_ns", expr("(ts_ns DIV 1000) * 1000"))
           .withColumn("ts", timestamp_micros(expr("ts_ns DIV 1000")))
-      case _ => // TIMESTAMP(MICROS) file (NTZ or LTZ)
-        val tsUs = col("ts").cast(org.apache.spark.sql.types.TimestampType)
+      case _ => // TIMESTAMP(MICROS) file
         raw.select(raw.columns.map {
-            case "ts" => (unix_micros(tsUs) * lit(1000L)).as("ts_ns")
+            case "ts" => (unix_micros(col("ts")) * lit(1000L)).as("ts_ns")
             case c    => col(c)
-          }.toIndexedSeq: _*)
-          .withColumn("ts", timestamp_micros(expr("ts_ns DIV 1000")))
+          }.toIndexedSeq :+ col("ts"): _*)
     }
   }
+
+  /** events.parquet's schema as the events readers scan it (this and
+    * `EventStream`): a TIMESTAMP(NANOS) `ts` is an epoch-ns long under
+    * `nanosAsLong`, and a zoneless TIMESTAMP(MICROS) `ts`, which Spark
+    * infers as TIMESTAMP_NTZ, is declared TimestampType. That read
+    * takes the stored micros as they are: no per-row time-zone
+    * conversion, and `ts_ns` does not depend on the session time zone,
+    * as DuckDB's `epoch_ns` does not. */
+  def eventsSchema(spark: SparkSession, sfDir: String): StructType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    StructType(spark.read.parquet(s"$sfDir/events.parquet").schema.map(f =>
+      if (f.name == "ts" && f.dataType == TimestampNTZType) f.copy(dataType = TimestampType)
+      else f))
+  }
+
+  /** events in stream order — by `ts_ns`, ties by `event_id`, nulls
+    * first — the order in which a user's events are a video's frames
+    * (DuckDB's `ORDER BY epoch_ns(ts), event_id` on these tables). */
+  val eventsOrder: Seq[Column] = Seq(col("ts_ns").asc_nulls_first, col("event_id").asc_nulls_first)
 }

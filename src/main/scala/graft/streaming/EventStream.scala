@@ -33,9 +33,9 @@ object EventStream {
   }
 
   /** Streaming scan of the events table with normalized event-time
-    * columns, schema-adaptive like Tables.events (the generator has
+    * columns, on the schema Tables.events reads (the generator has
     * shipped `ts` as both TIMESTAMP(NANOS) — epoch-ns long under
-    * `nanosAsLong` — and plain TIMESTAMP(MICROS)/NTZ). Surfaces the
+    * `nanosAsLong` — and plain TIMESTAMP(MICROS)). Surfaces the
     * same contract either way: `ets` a µs TimestampType event-time
     * column and `ts_ns` whole-µs epoch nanos (= DuckDB epoch_ns(ts));
     * the raw `ts` is dropped so no caller can depend on its physical
@@ -43,17 +43,15 @@ object EventStream {
     * must be a directory") — the [e] glob keeps basePath = sfDir but
     * matches only the events table. */
   private def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = graft.sources.Tables.eventsSchema(spark, sfDir)
     val raw = spark.readStream.schema(schema).parquet(s"$sfDir/[e]vents.parquet")
     val shaped = schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts_ns", expr("(ts DIV 1000) * 1000"))
           .withColumn("ets", timestamp_micros(expr("ts DIV 1000")))
       case _ =>
-        val tsUs = col("ts").cast(org.apache.spark.sql.types.TimestampType)
-        raw.withColumn("ts_ns", unix_micros(tsUs) * lit(1000L))
-          .withColumn("ets", timestamp_micros(unix_micros(tsUs)))
+        raw.withColumn("ts_ns", unix_micros(col("ts")) * lit(1000L))
+          .withColumn("ets", col("ts"))
     }
     shaped.drop("ts")
   }

@@ -47,6 +47,26 @@ class EventsSchemaSpec extends SparkSpec {
     assert(a(2).getLong(1) == 1700000002_345678000L)
   }
 
+  test("the micros vintage gives the same ts_ns under any session time zone") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_evtz").toString
+    Seq((1L, 1700000000123456L), (2L, 1700003600000001L), (3L, 0L))
+      .toDF("event_id", "us")
+      .select(col("event_id"), timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"),
+        lit(1L).as("user_id"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    def read() = Tables.events(spark, dir).select("event_id", "ts_ns", "ts")
+      .collect().sortBy(_.getLong(0)).toSeq
+    val utc = read()
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val la = try {
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      read()
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+    assert(utc.map(_.getLong(1)) === Seq(1700000000123456000L, 1700003600000001000L, 0L))
+    assert(la === utc)
+  }
+
   test("column order and dtypes match across vintages") {
     val real = Tables.events(spark, sf001)
     assert(real.columns.toSeq ==
