@@ -47,7 +47,22 @@ object Tables {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  /** events with `ts_ns: Long` (epoch nanos) and `ts: Timestamp` (µs).
+  /** events with `ts_ns: Long` (epoch nanos) and `ts: Timestamp` (µs),
+    * shaped by [[shapeEvents]]. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    shapeEvents(spark.read.schema(eventsSchema(spark, sfDir)).parquet(s"$sfDir/events.parquet"))
+
+  /** [[events]] as a streaming scan, same columns. The file-stream
+    * source requires a directory/glob ("basePath must be a directory"):
+    * the [e] glob keeps basePath = sfDir but matches only the events
+    * table. */
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    shapeEvents(spark.readStream.schema(eventsSchema(spark, sfDir))
+      .parquet(s"$sfDir/[e]vents.parquet"))
+
+  /** The one place that turns a raw events frame's `ts`, batch or
+    * streaming, read with [[eventsSchema]], into `ts_ns` (in `ts`'s
+    * place) and a µs TimestampType `ts` (appended last).
     *
     * Schema-adaptive: the driver's generator has shipped `ts` both as
     * parquet TIMESTAMP(NANOS) (read as an epoch-ns long via
@@ -59,8 +74,7 @@ object Tables {
     * `ts` is a µs TimestampType. Truncation to whole µs is monotone,
     * so orderings are unaffected.
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.schema(eventsSchema(spark, sfDir)).parquet(s"$sfDir/events.parquet")
+  private def shapeEvents(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) file
         raw.withColumnRenamed("ts", "ts_ns")
@@ -72,16 +86,15 @@ object Tables {
             case c    => col(c)
           }.toIndexedSeq :+ col("ts"): _*)
     }
-  }
 
-  /** events.parquet's schema as the events readers scan it (this and
-    * `EventStream`): a TIMESTAMP(NANOS) `ts` is an epoch-ns long under
-    * `nanosAsLong`, and a zoneless TIMESTAMP(MICROS) `ts`, which Spark
-    * infers as TIMESTAMP_NTZ, is declared TimestampType. That read
+  /** events.parquet's schema as both events readers scan it: a
+    * TIMESTAMP(NANOS) `ts` is an epoch-ns long under `nanosAsLong`, and
+    * a zoneless TIMESTAMP(MICROS) `ts`, which Spark infers as
+    * TIMESTAMP_NTZ, is declared TimestampType. That read
     * takes the stored micros as they are: no per-row time-zone
     * conversion, and `ts_ns` does not depend on the session time zone,
     * as DuckDB's `epoch_ns` does not. */
-  def eventsSchema(spark: SparkSession, sfDir: String): StructType = {
+  private def eventsSchema(spark: SparkSession, sfDir: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     StructType(spark.read.parquet(s"$sfDir/events.parquet").schema.map(f =>
       if (f.name == "ts" && f.dataType == TimestampNTZType) f.copy(dataType = TimestampType)

@@ -1,8 +1,12 @@
 package graft.streaming
 
+import graft.queries.Q
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import StreamRun.{drain, replay, watch, writeDrop, Sentinel, StateParts8}
 
 /** Structured Streaming surface: the reference's only stream shape is
   * "watch a source and process what arrives" (HF streaming iterator,
@@ -17,63 +21,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
-  /** Runs `f` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the session value after. Streaming queries bind
-    * their STATE STORE count to the shuffle-partition setting at start
-    * time (AQE never re-plans a stream), and every micro-batch commits
-    * every state store — so a test-scale stream pays 32 store commits
-    * per stateful operator per batch for data that fits in a handful.
-    * The rollups below size state to their volume; a production deploy
-    * sizes this to sustained throughput instead. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, old)
-  }
+  /** `Tables.eventsStream` with its µs event-time column `ts` named
+    * `ets`, the name the event-time operators here take. */
+  private def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.eventsStream(spark, sfDir).withColumnRenamed("ts", "ets")
 
-  /** Streaming scan of the events table with normalized event-time
-    * columns, on the schema Tables.events reads (the generator has
-    * shipped `ts` as both TIMESTAMP(NANOS) — epoch-ns long under
-    * `nanosAsLong` — and plain TIMESTAMP(MICROS)). Surfaces the
-    * same contract either way: `ets` a µs TimestampType event-time
-    * column and `ts_ns` whole-µs epoch nanos (= DuckDB epoch_ns(ts));
-    * the raw `ts` is dropped so no caller can depend on its physical
-    * type. The file-stream source requires a directory/glob ("basePath
-    * must be a directory") — the [e] glob keeps basePath = sfDir but
-    * matches only the events table. */
-  private def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = graft.sources.Tables.eventsSchema(spark, sfDir)
-    val raw = spark.readStream.schema(schema).parquet(s"$sfDir/[e]vents.parquet")
-    val shaped = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts_ns", expr("(ts DIV 1000) * 1000"))
-          .withColumn("ets", timestamp_micros(expr("ts DIV 1000")))
-      case _ =>
-        raw.withColumn("ts_ns", unix_micros(col("ts")) * lit(1000L))
-          .withColumn("ets", col("ts"))
-    }
-    shaped.drop("ts")
-  }
-
-  /** Hourly tumbling-window counts/sums per event_type, computed by a
-    * real streaming query (memory sink, complete mode). */
+  /** Hourly tumbling-window counts/sums per event_type (q30), computed
+    * by a real streaming query (memory sink, complete mode). */
   def hourlyRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    // stable per-sfDir sink name; stop any leftover run of the same query
-    val name = "graft_stream_hourly_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val stream = eventsStream(spark, sfDir)
-      .withColumn("value_c", expr("CAST(round(value*100) AS BIGINT)"))
-    val agg = stream
+    val agg = eventsStream(spark, sfDir)
+      .withColumn("value_c", Q.cents(col("value")))
       .groupBy(window(col("ets"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).select(
+    drain(spark, "hourly", sfDir, agg, "complete", StateParts8).select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_type"), col("n"),
         (col("sum_c").cast("double") / 100.0).as("sum_value"))
@@ -120,23 +80,33 @@ object EventStream {
     * on a real unbounded stream a finite delay bounds the state
     * (StreamDedupSpec pins the eviction behavior). */
   def dedupRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_dedup_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
     val stream = eventsStream(spark, sfDir)
-      .withColumn("value_c", expr("CAST(round(value*100) AS BIGINT)"))
+      .withColumn("value_c", Q.cents(col("value")))
       .withColumn("copy", explode(array(lit(1), lit(2)))) // planted dups
     val deduped = dedupStream(stream, Seq("event_id"), delay = "3650 days")
-    withStatePartitions(spark, 8) {
-      val q = deduped
-        .select(col("event_type"), col("value_c"))
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+      .select(col("event_type"), col("value_c"))
+    drain(spark, "dedup", sfDir, deduped, "append", StateParts8)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
       .orderBy(col("event_type"))
+  }
+
+  /** SLIDING event-time windows (2 h width, 1 h slide): every event
+    * contributes to width/slide = 2 overlapping windows (Spark aligns
+    * starts to the slide grid, so the member windows of t are
+    * floor_h(t) and floor_h(t) − 1 h — what the oracle unnests). The
+    * tumbling rollup (q30) covers the disjoint case; this is the
+    * moving-average/rate-monitoring shape. State is (window, type)-
+    * keyed and bounded like the tumbling case, ×(width/slide). */
+  def slidingRollup(spark: SparkSession, sfDir: String): DataFrame = {
+    val agg = eventsStream(spark, sfDir)
+      .withColumn("value_c", Q.cents(col("value")))
+      .groupBy(window(col("ets"), "2 hours", "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
+    drain(spark, "sliding", sfDir, agg, "complete", StateParts8).select(
+        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
+        col("event_type"), col("n"), col("sum_c"))
+      .orderBy(col("win_start"), col("event_type"))
   }
 
   /** Stream-STREAM interval join driven to completion (q76): clicks
@@ -152,36 +122,7 @@ object EventStream {
     * interval join's inner-match subset, q73 without zero-view
     * clicks). The ns-precision strict bound rides along as a plain
     * filter so the oracle is integer-exact. */
-  /** SLIDING event-time windows (2 h width, 1 h slide): every event
-    * contributes to width/slide = 2 overlapping windows (Spark aligns
-    * starts to the slide grid, so the member windows of t are
-    * floor_h(t) and floor_h(t) − 1 h — what the oracle unnests). The
-    * tumbling rollup (q30) covers the disjoint case; this is the
-    * moving-average/rate-monitoring shape. State is (window, type)-
-    * keyed and bounded like the tumbling case, ×(width/slide). */
-  def slidingRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_sliding_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val stream = eventsStream(spark, sfDir)
-      .withColumn("value_c", expr("CAST(round(value*100) AS BIGINT)"))
-    val agg = stream
-      .groupBy(window(col("ets"), "2 hours", "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
-        col("event_type"), col("n"), col("sum_c"))
-      .orderBy(col("win_start"), col("event_type"))
-  }
-
   def intervalJoinRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_join_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
     def src = eventsStream(spark, sfDir)
     val clicks = src.filter(col("event_type") === "click")
       .select(col("user_id").as("c_uid"), col("event_id").as("click_id"),
@@ -190,67 +131,38 @@ object EventStream {
     val views = src.filter(col("event_type") === "view")
       .select(col("user_id").as("v_uid"), col("event_id").as("view_id"),
         col("ets").as("vets"), col("ts_ns").as("vts"),
-        expr("CAST(round(value*100) AS BIGINT)").as("value_c"))
+        Q.cents(col("value")).as("value_c"))
       .withWatermark("vets", "3650 days")
     val joined = clicks.join(views,
       col("c_uid") === col("v_uid") &&
         col("vets") >= col("cets") - expr("INTERVAL 24 HOURS") &&
         col("vets") <= col("cets") &&
         col("vts") > col("cts") - lit(86400L * 1000000000L))
-    withStatePartitions(spark, 8) {
-      val q = joined.select(col("click_id"), col("c_uid").as("user_id"), col("value_c"))
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+      .select(col("click_id"), col("c_uid").as("user_id"), col("value_c"))
+    drain(spark, "join", sfDir, joined, "append", StateParts8)
       .groupBy(col("click_id"), col("user_id"))
       .agg(count(lit(1)).as("n_views"), sum(col("value_c")).as("view_value_c"))
       .orderBy(col("click_id"))
   }
 
-  /** Stream-stream LEFT OUTER interval join (q193): every click joins
-    * the views of the same user in the hour before it — and clicks
-    * with NO such view must still come out, which is the part plain
-    * stream-stream inner joins (q76) cannot express. Outer emission is
-    * WATERMARK-DRIVEN: an unmatched click leaves the state store only
-    * once the watermark proves no matching view can still arrive, so a
-    * stream whose watermark never passes its last click would hold
-    * those rows forever and the answer would depend on shutdown
-    * timing. The harness therefore replays the batch table through a
-    * scratch directory as THREE ordered file drops — the real events,
-    * then two far-future sentinel drops (one click + one view each, so
-    * BOTH sides' watermarks advance) — with maxFilesPerTrigger=1: by
-    * the time the second sentinel batch runs, the watermark from the
-    * first sentinel already exceeds every real click's eviction bound,
-    * so the state fully drains no matter whether the engine schedules
-    * a trailing no-data batch. Sentinels carry negative ids and are
-    * dropped before the rollup. The final answer provably equals the
-    * batch LEFT JOIN the oracle runs. */
-  /** Shared watermark-drain harness: replays the events table through
-    * a scratch directory as ordered file drops — the real rows, then
-    * two far-future sentinel drops (one click + one view each, so BOTH
-    * sides' watermarks advance) — and returns a thunk opening the
-    * stream source over them. Every rollup whose answer is only
+  /** Watermark-drain harness for every rollup whose answer is only
     * deterministic once the watermark provably passes each real row
-    * (outer-join unmatched emission, append-mode window flush) uses
-    * this: with 2 files per trigger, batch 0 = real data + sentinel 1
-    * (so the watermark computed at its end already exceeds every real
-    * row's eviction/emission bound) and batch 1 = sentinel 2 (applies
-    * it and drains the state) — no dependence on whether the engine
-    * schedules a trailing no-data batch. The real-data drop is
-    * coalesced to ONE file so it cannot fan into one micro-batch per
-    * shuffle partition (~30 state-store commit rounds for nothing);
-    * production replaces the replay with a live source. Sentinels
-    * carry negative ids/users and are dropped before each rollup. */
+    * (outer-join unmatched emission, append-mode window flush):
+    * replays the events table as three ordered one-file drops — the
+    * real rows, then two far-future sentinel drops (one click + one
+    * view each, so BOTH sides' watermarks advance) — and returns a
+    * thunk opening the stream over them, 2 files per trigger. So
+    * batch 0 = real data + sentinel 1 (the watermark computed at its
+    * end already exceeds every real row's eviction/emission bound) and
+    * batch 1 = sentinel 2 (applies it and drains the state): two
+    * micro-batches, with no dependence on whether the engine schedules
+    * a trailing no-data batch. Sentinels carry negative ids/users and
+    * are dropped before each rollup. */
   private def sentinelReplay(spark: SparkSession, tag: String,
       sfDir: String): () => DataFrame = {
-    import graft.queries.Q
-    val drops = java.nio.file.Paths.get(Q.scratchDir(spark, tag))
-    val ev = graft.sources.Tables.events(spark, sfDir)
+    val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("CAST(round(value*100) AS BIGINT)").as("value_c"),
-        timestamp_micros(expr("ts_ns DIV 1000")).as("ets"))
+        Q.cents(col("value")).as("value_c"), col("ts").as("ets"))
     def sentinel(idBase: Long, us: Long): DataFrame =
       spark.range(1).select(
         lit(idBase).as("event_id"), lit(-1L).as("user_id"),
@@ -261,64 +173,37 @@ object EventStream {
           lit("view").as("event_type"), lit(0L).as("value_c"),
           timestamp_micros(lit(us)).as("ets")))
     val day = 86400L * 1000000L
-    val streamDir = drops.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    def writeDrop(df: DataFrame, i: Int): Unit = {
-      val tmp = drops.resolve(s"tmp$i")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      // flatten to one ordered file per drop; mtime drives the file
-      // source's processing order under maxFilesPerTrigger
-      val files = java.nio.file.Files.list(tmp).iterator()
-      var k = 0
-      while (files.hasNext) {
-        val f = files.next()
-        if (f.toString.endsWith(".parquet")) {
-          val dst = streamDir.resolve(f"$i%02d_$k%04d.parquet")
-          java.nio.file.Files.move(f, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 60000L)
-          k += 1
-        }
-      }
-    }
-    // The sentinel timestamps need max(ets), which used to be a
-    // separate full scan of events per drained query; it now rides the
-    // real-data drop's write job as an observed metric (one pass).
+    // The sentinel timestamps need max(ets); it rides the real-data
+    // drop's write job as an observed metric instead of a scan of its own.
     val obs = org.apache.spark.sql.Observation()
-    writeDrop(ev.observe(obs, max(unix_micros(col("ets"))).as("max_us"))
-      .coalesce(1), 0)
+    val dir = replay(spark, tag,
+      Seq(ev.observe(obs, max(unix_micros(col("ets"))).as("max_us"))))
     val maxUs = obs.get("max_us").asInstanceOf[Long]
-    writeDrop(sentinel(-1L, maxUs + 30 * day), 1)
-    writeDrop(sentinel(-3L, maxUs + 60 * day), 2)
-    val schema = spark.read.parquet(streamDir.toString).schema
-    () => spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(streamDir.toString)
+    writeDrop(dir, 1, sentinel(-1L, maxUs + 30 * day))
+    writeDrop(dir, 2, sentinel(-3L, maxUs + 60 * day))
+    () => watch(spark, dir, 2)
   }
 
-  /** Runs `df` as an append-mode streaming query into a memory sink
-    * named `name`, drained to completion, and returns the sink table.
-    * No-data micro-batches exist to evict state when the watermark
-    * advances with nothing arriving — under sentinelReplay eviction is
-    * driven by the sentinel BATCHES themselves (batch N+1 applies
-    * batch N's watermark), so the extra empty batches only add
-    * state-store commit rounds; they are disabled for the run, and
-    * each stateful operator gets 2 state stores. */
-  private def runDrained(spark: SparkSession, name: String,
-      df: DataFrame): DataFrame = {
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val oldNoData = spark.conf.getOption(noDataKey)
-    spark.conf.set(noDataKey, "false")
-    try withStatePartitions(spark, 2) {
-      val q = df.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      oldNoData match {
-        case Some(v) => spark.conf.set(noDataKey, v)
-        case None => spark.conf.unset(noDataKey)
-      }
-    }
-    spark.table(name)
+  /** The join q193, q250 and q251 share: sentinel-replayed clicks
+    * (c_uid, click_id, cets) and views (v_uid, view_id, vets, value_c),
+    * each watermarked 1 minute, joined `how` on the same user with the
+    * view in the hour up to the click. */
+  private def clickViewJoin(spark: SparkSession, tag: String, sfDir: String,
+      how: String): DataFrame = {
+    val src = sentinelReplay(spark, tag, sfDir)
+    val clicks = src().filter(col("event_type") === "click")
+      .select(col("user_id").as("c_uid"), col("event_id").as("click_id"),
+        col("ets").as("cets"))
+      .withWatermark("cets", "1 minute")
+    val views = src().filter(col("event_type") === "view")
+      .select(col("user_id").as("v_uid"), col("event_id").as("view_id"),
+        col("ets").as("vets"), col("value_c"))
+      .withWatermark("vets", "1 minute")
+    clicks.join(views,
+      col("c_uid") === col("v_uid") &&
+        col("vets") >= col("cets") - expr("INTERVAL 1 HOUR") &&
+        col("vets") <= col("cets"),
+      how)
   }
 
   /** Stream-stream LEFT SEMI interval join (q274): views that ARE
@@ -335,9 +220,7 @@ object EventStream {
     * maximum), which is exactly why retrieval-style "has a
     * conversion" questions should plan semi, never inner+distinct. */
   def leftSemiJoinRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_semi_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val src = sentinelReplay(spark, "graft_stream_semi", sfDir)
+    val src = sentinelReplay(spark, "semi", sfDir)
     val views = src().filter(col("event_type") === "view")
       .select(col("user_id").as("v_uid"), col("event_id").as("view_id"),
         col("ets").as("vets"), col("value_c"))
@@ -350,7 +233,7 @@ object EventStream {
         col("cets") >= col("vets") &&
         col("cets") <= col("vets") + expr("INTERVAL 1 HOUR"),
       "leftSemi")
-    runDrained(spark, name, joined)
+    drain(spark, "semi", sfDir, joined, "append", Sentinel)
       .filter(col("v_uid") >= 0) // sentinels carry user -1 and match themselves
       .groupBy(col("v_uid").as("user_id"))
       .agg(count(lit(1)).as("n_converted_views"),
@@ -358,26 +241,22 @@ object EventStream {
       .orderBy(col("user_id"))
   }
 
+  /** Stream-stream LEFT OUTER interval join (q193): every click joins
+    * the views of the same user in the hour before it — and clicks
+    * with NO such view must still come out, which is the part plain
+    * stream-stream inner joins (q76) cannot express. Outer emission is
+    * WATERMARK-DRIVEN: an unmatched click leaves the state store only
+    * once the watermark proves no matching view can still arrive, so a
+    * stream whose watermark never passes its last click would hold
+    * those rows forever and the answer would depend on shutdown
+    * timing. The [[sentinelReplay]] drain makes that deterministic;
+    * sentinels carry negative ids and are dropped before the rollup.
+    * The final answer provably equals the batch LEFT JOIN the oracle
+    * runs. */
   def outerJoinRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_outer_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val src = sentinelReplay(spark, "graft_stream_outer", sfDir)
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("event_id").as("click_id"),
-        col("ets").as("cets"))
-      .withWatermark("cets", "1 minute")
-    val views = src().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_uid"), col("event_id").as("view_id"),
-        col("ets").as("vets"), col("value_c"))
-      .withWatermark("vets", "1 minute")
-    val joined = clicks.join(views,
-      col("c_uid") === col("v_uid") &&
-        col("vets") >= col("cets") - expr("INTERVAL 1 HOUR") &&
-        col("vets") <= col("cets"),
-      "leftOuter")
-    runDrained(spark, name, joined
-        .select(col("click_id"), col("c_uid").as("user_id"),
-          col("view_id"), col("value_c")))
+    val joined = clickViewJoin(spark, "outer", sfDir, "leftOuter")
+      .select(col("click_id"), col("c_uid").as("user_id"), col("view_id"), col("value_c"))
+    drain(spark, "outer", sfDir, joined, "append", Sentinel)
       .filter(col("click_id") >= 0)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_rows"),
@@ -401,25 +280,10 @@ object EventStream {
     * by user_id. The answer provably equals the batch FULL JOIN the
     * oracle runs. */
   def fullOuterJoinRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_fouter_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val src = sentinelReplay(spark, "graft_stream_fouter", sfDir)
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("event_id").as("click_id"),
-        col("ets").as("cets"))
-      .withWatermark("cets", "1 minute")
-    val views = src().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_uid"), col("event_id").as("view_id"),
-        col("ets").as("vets"), col("value_c"))
-      .withWatermark("vets", "1 minute")
-    val joined = clicks.join(views,
-      col("c_uid") === col("v_uid") &&
-        col("vets") >= col("cets") - expr("INTERVAL 1 HOUR") &&
-        col("vets") <= col("cets"),
-      "fullOuter")
-    runDrained(spark, name, joined
-        .select(coalesce(col("c_uid"), col("v_uid")).as("user_id"),
-          col("click_id"), col("view_id"), col("value_c")))
+    val joined = clickViewJoin(spark, "fouter", sfDir, "fullOuter")
+      .select(coalesce(col("c_uid"), col("v_uid")).as("user_id"),
+        col("click_id"), col("view_id"), col("value_c"))
+    drain(spark, "fouter", sfDir, joined, "append", Sentinel)
       .filter(col("user_id") >= 0) // sentinels carry user -1
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_rows"),
@@ -449,21 +313,7 @@ object EventStream {
     * aggregation state bounded by open windows — both per-user/
     * per-window partitioned at 100 TB. */
   def chainedWindowRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_chain_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val src = sentinelReplay(spark, "graft_stream_chain", sfDir)
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_uid"), col("event_id").as("click_id"),
-        col("ets").as("cets"))
-      .withWatermark("cets", "1 minute")
-    val views = src().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_uid"), col("event_id").as("view_id"),
-        col("ets").as("vets"), col("value_c"))
-      .withWatermark("vets", "1 minute")
-    val joined = clicks.join(views,
-      col("c_uid") === col("v_uid") &&
-        col("vets") >= col("cets") - expr("INTERVAL 1 HOUR") &&
-        col("vets") <= col("cets"))
+    val joined = clickViewJoin(spark, "chain", sfDir, "inner")
       .filter(col("click_id") >= 0) // drop the self-matching sentinel pair
     // distinct aggregates are unsupported INSIDE a stream (q193's
     // countDistinct runs on the drained sink table, a batch frame);
@@ -473,10 +323,9 @@ object EventStream {
       .groupBy(window(col("cets"), "1 hour"))
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("value_c")).as("view_value_c"))
-    runDrained(spark, name, agg
-        .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("hour_start"),
-          col("n_pairs"), col("view_value_c")))
+      .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
+        col("n_pairs"), col("view_value_c"))
+    drain(spark, "chain", sfDir, agg, "append", Sentinel)
       .orderBy(col("hour_start"))
   }
 
@@ -496,35 +345,15 @@ object EventStream {
     * answer. At scale each merge is one co-keyed shuffle of
     * (customers-in-batch ∪ changed-state) — never the full history. */
   def foreachBatchMergeRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.queries.Q
-    val root = java.nio.file.Paths.get(Q.scratchDir(spark, "graft_stream_febatch"))
     val ms = unix_millis(col("o_orderdate").cast("timestamp"))
-    val orders = graft.sources.Tables.table(spark, sfDir, "orders")
+    val orders = Tables.table(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), ms.as("ms"),
-        expr("CAST(round(o_totalprice*100) AS BIGINT)").as("pc"),
-        col("o_orderstatus"))
+        Q.cents(col("o_totalprice")).as("pc"), col("o_orderstatus"))
     // two ordered drops, split by order key parity (arbitrary but
-    // deterministic); mtime drives file-source order
-    val streamDir = root.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    Seq(orders.filter(col("o_orderkey") % 2 === 0),
-        orders.filter(col("o_orderkey") % 2 === 1))
-      .zipWithIndex.foreach { case (df, i) =>
-        val tmp = root.resolve(s"tmp$i")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val files = java.nio.file.Files.list(tmp).iterator()
-        var k = 0
-        while (files.hasNext) {
-          val f = files.next()
-          if (f.toString.endsWith(".parquet")) {
-            val dst = streamDir.resolve(f"$i%02d_$k%04d.parquet")
-            java.nio.file.Files.move(f, dst)
-            dst.toFile.setLastModified(1700000000000L + i * 60000L)
-            k += 1
-          }
-        }
-      }
-    val schema = spark.read.parquet(streamDir.toString).schema
+    // deterministic)
+    val streamDir = replay(spark, "febatch", Seq(
+      orders.filter(col("o_orderkey") % 2 === 0), orders.filter(col("o_orderkey") % 2 === 1)))
+    val root = java.nio.file.Paths.get(streamDir).getParent
     def compact(df: DataFrame): DataFrame = df
       .groupBy(col("o_custkey"))
       .agg(max_by(struct(col("o_orderkey"), col("ms"), col("pc"),
@@ -536,8 +365,7 @@ object EventStream {
     // happens-before instead of leaning on incidental synchronization
     // inside StreamingQuery.
     val lastVersion = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
+    val q = watch(spark, streamDir, 1)
       .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         val prev = root.resolve(s"state_v${batchId - 1}")
         val cur = compact(batch)
@@ -588,21 +416,13 @@ object EventStream {
     * is dimension-sized — the stream-stream machinery (q76) is only
     * for two unbounded sides. */
   def enrichRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_enrich_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
     val stream = eventsStream(spark, sfDir)
-      .select(col("user_id"),
-        expr("CAST(round(value*100) AS BIGINT)").as("value_c"))
-    val dim = graft.sources.Tables.table(spark, sfDir, "customer")
+      .select(col("user_id"), Q.cents(col("value")).as("value_c"))
+    val dim = Tables.table(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val joined = stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
-    withStatePartitions(spark, 8) {
-      val q = joined.select(col("c_mktsegment"), col("value_c"))
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+      .select(col("c_mktsegment"), col("value_c"))
+    drain(spark, "enrich", sfDir, joined, "append", StateParts8)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
       .orderBy(col("c_mktsegment"))
@@ -622,21 +442,12 @@ object EventStream {
   def statefulSessionRollup(spark: SparkSession, sfDir: String,
       gapNs: Long = 1800L * 1000000000L): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_sessions_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
     // ts_ns is already whole-µs epoch nanos — DuckDB sees the same µs
     val events = eventsStream(spark, sfDir)
-      .select(col("user_id"), col("ts_ns").as("ts"),
-        expr("CAST(round(value*100) AS BIGINT)").as("value_c"))
+      .select(col("user_id"), col("ts_ns").as("ts"), Q.cents(col("value")).as("value_c"))
       .as[(Long, Long, Long)]
-    val sessions = sessionizeStateful(events, gapNs)
-    withStatePartitions(spark, 8) {
-      val q = sessions.toDF()
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    drain(spark, "sessions", sfDir, sessionizeStateful(events, gapNs).toDF(), "append",
+        StateParts8)
       .select(col("user_id"), col("start_ns"), col("end_ns"),
         col("n_events"), col("sum_c"))
       .orderBy(col("user_id"), col("start_ns"))
@@ -652,25 +463,17 @@ object EventStream {
     * each updated key to a keyed store via foreachBatch, state stays
     * partitioned by key either way. */
   def cdcLatestRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_cdc_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
     val schema = spark.read.parquet(s"$sfDir/orders.parquet").schema
     val ms = unix_millis(col("o_orderdate").cast("timestamp"))
     val agg = spark.readStream.schema(schema).parquet(s"$sfDir/[o]rders.parquet")
       .groupBy(col("o_custkey"))
       .agg(
         max_by(struct(col("o_orderkey"), ms.as("ms"),
-          expr("CAST(round(o_totalprice*100) AS BIGINT)").as("pc"),
+          Q.cents(col("o_totalprice")).as("pc"),
           col("o_orderstatus")),
           struct(ms, col("o_orderkey"))).as("latest"),
         count(lit(1)).as("n_orders"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    drain(spark, "cdc", sfDir, agg, "complete", StateParts8)
       .select(col("o_custkey"),
         col("latest.o_orderkey").as("latest_orderkey"),
         col("latest.ms").as("latest_order_ms"),

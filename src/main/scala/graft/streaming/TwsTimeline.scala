@@ -1,8 +1,12 @@
 package graft.streaming
 
+import graft.queries.Q
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+
+import StreamRun.{drain, halves, replay, watch, writeDrop, RocksDb8, ShufflePartitions}
 
 /** Per-user running timeline statistics on the `transformWithState`
   * arbitrary-state API (Spark 4's successor to
@@ -129,40 +133,16 @@ object TwsTimeline {
     * the rows only the timers can emit. */
   def timerSessionRollup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.queries.Q
     val gapNs = 1800000000000L // 30 min
-    val name = "graft_stream_twstimer_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val drops = java.nio.file.Paths.get(Q.scratchDir(spark, "graft_stream_twstimer"))
-    val ev = graft.sources.Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts_ns"),
-        expr("CAST(round(value*100) AS BIGINT)").as("value_c"))
-    val Array(lo, hi) = ev.agg(min(col("ts_ns")), max(col("ts_ns")))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray // 1-row scalar
-    val b = lo + (hi - lo) / 2
+    val ev = Tables.events(spark, sfDir)
+      .select(col("user_id"), col("ts_ns"), Q.cents(col("value")).as("value_c"))
+    val (early, late, hi) = halves(ev, "ts_ns")
     val day = 86400L * 1000000000L
     def sentinel(ns: Long): DataFrame = spark.range(1).select(
       lit(-1L).as("user_id"), lit(ns).as("ts_ns"), lit(0L).as("value_c"))
-    val parts = Seq(ev.filter(col("ts_ns") < b), ev.filter(col("ts_ns") >= b),
-      sentinel(hi + 30 * day), sentinel(hi + 60 * day))
-    val streamDir = drops.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    parts.zipWithIndex.foreach { case (df, i) =>
-      val tmp = drops.resolve(s"tmp$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val files = java.nio.file.Files.list(tmp).iterator()
-      while (files.hasNext) {
-        val f = files.next()
-        if (f.toString.endsWith(".parquet")) {
-          val dst = streamDir.resolve(f"$i%02d.parquet")
-          java.nio.file.Files.move(f, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 60000L)
-        }
-      }
-    }
-    val schema = spark.read.parquet(streamDir.toString).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
+    val dir = replay(spark, "twstimer",
+      Seq(early, late, sentinel(hi + 30 * day), sentinel(hi + 60 * day)))
+    val src = watch(spark, dir, 1)
       .withColumn("ets", timestamp_micros(expr("ts_ns DIV 1000")))
       .withWatermark("ets", "1 minute")
       .select(col("user_id"), col("ts_ns"), col("value_c"))
@@ -171,25 +151,7 @@ object TwsTimeline {
       .transformWithState(new TimerSessionProcessor(gapNs),
         TimeMode.EventTime(), OutputMode.Append(),
         Encoders.product[TwsSessionOut])
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val shuffleKey = "spark.sql.shuffle.partitions"
-      val oldShuffle = spark.conf.get(shuffleKey)
-      spark.conf.set(shuffleKey, "8")
-      try {
-        val q = out.toDF()
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally spark.conf.set(shuffleKey, oldShuffle)
-    } finally oldProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-    spark.table(name)
+    drain(spark, "twstimer", sfDir, out.toDF(), "append", RocksDb8)
       .filter(col("user_id") >= 0) // drop the watermark-advancing sentinel
       .select(col("user_id"), col("start_ns"), col("end_ns"),
         col("n_events"), col("sum_c"))
@@ -206,52 +168,21 @@ object TwsTimeline {
     * crash-recovery/exactly-once contract a production stream lives
     * on, driven deterministically. */
   def resumeRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.queries.Q
-    val name = "graft_stream_resume_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val root = java.nio.file.Paths.get(Q.scratchDir(spark, "graft_stream_resume"))
-    val streamDir = root.resolve("stream")
-    val ckpt = root.resolve("ckpt").toString
-    java.nio.file.Files.createDirectories(streamDir)
-    val ev = graft.sources.Tables.events(spark, sfDir)
-      .select(col("event_type"),
-        expr("CAST(round(value*100) AS BIGINT)").as("value_c"), col("ts_ns"))
-    val Array(lo, hi) = ev.agg(min(col("ts_ns")), max(col("ts_ns")))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray // 1-row scalar
-    val b = lo + (hi - lo) / 2
-    def drop(df: org.apache.spark.sql.DataFrame, i: Int): Unit = {
-      val tmp = root.resolve(s"tmp$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val files = java.nio.file.Files.list(tmp).iterator()
-      while (files.hasNext) {
-        val f = files.next()
-        if (f.toString.endsWith(".parquet")) {
-          val dst = streamDir.resolve(f"$i%02d.parquet")
-          java.nio.file.Files.move(f, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 60000L)
-        }
-      }
-    }
-    drop(ev.filter(col("ts_ns") < b).drop("ts_ns"), 0)
-    val schema = spark.read.parquet(streamDir.toString).schema
-    def runLifetime(): Unit = {
-      val q = spark.readStream.schema(schema).parquet(streamDir.toString)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name).option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val oldShuffle = spark.conf.get(shuffleKey)
-    spark.conf.set(shuffleKey, "2")
-    try {
-      runLifetime() // lifetime 1: first half only
-      drop(ev.filter(col("ts_ns") >= b).drop("ts_ns"), 1)
-      runLifetime() // lifetime 2: resumes from the checkpoint, sees drop 1
-    } finally spark.conf.set(shuffleKey, oldShuffle)
-    spark.table(name)
+    val ev = Tables.events(spark, sfDir)
+      .select(col("event_type"), Q.cents(col("value")).as("value_c"), col("ts_ns"))
+    val (first, second, _) = halves(ev, "ts_ns")
+    val dir = replay(spark, "resume", Seq(first.drop("ts_ns")))
+    val ckpt = Some(java.nio.file.Paths.get(dir).resolveSibling("ckpt").toString)
+    // each lifetime sees exactly one new drop file, so one file per
+    // trigger is one micro-batch per lifetime
+    val agg = watch(spark, dir, 1)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
+    val confs = Seq(ShufflePartitions -> "2")
+    drain(spark, "resume", sfDir, agg, "complete", confs, ckpt) // lifetime 1: first half only
+    writeDrop(dir, 1, second.drop("ts_ns"))
+    // lifetime 2 resumes from the checkpoint and sees only drop 1
+    drain(spark, "resume", sfDir, agg, "complete", confs, ckpt)
       .select(col("event_type"), col("n"), col("sum_c"))
       .orderBy(col("event_type"))
   }
@@ -260,64 +191,17 @@ object TwsTimeline {
     * and returns the drained per-user rows (q199). */
   def runningTimeline(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.queries.Q
-    val name = "graft_stream_tws_" + math.abs(sfDir.hashCode).toString
-    spark.streams.active.filter(q => Option(q.name).exists(_ == name)).foreach(_.stop())
-    val drops = java.nio.file.Paths.get(Q.scratchDir(spark, "graft_stream_tws"))
-    val ev = graft.sources.Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts_ns"), col("event_id"),
-        expr("CAST(round(value*100) AS BIGINT)").as("value_c"))
-    // fixed time boundary = the midpoint of the observed span: every
-    // row of drop 0 precedes every row of drop 1, so the cross-batch
-    // state fold sees time-ordered batches (the only order in which
-    // running gap statistics are well-defined)
-    val b = ev.agg((min(col("ts_ns")) + (max(col("ts_ns")) - min(col("ts_ns"))) / 2)
-      .cast("long")).collect()(0).getLong(0) // 1-row scalar
-    val streamDir = drops.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    Seq(ev.filter(col("ts_ns") < b), ev.filter(col("ts_ns") >= b))
-      .zipWithIndex.foreach { case (df, i) =>
-        val tmp = drops.resolve(s"tmp$i")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val files = java.nio.file.Files.list(tmp).iterator()
-        while (files.hasNext) {
-          val f = files.next()
-          if (f.toString.endsWith(".parquet")) {
-            val dst = streamDir.resolve(f"$i%02d.parquet")
-            java.nio.file.Files.move(f, dst)
-            dst.toFile.setLastModified(1700000000000L + i * 60000L)
-          }
-        }
-      }
-    val schema = spark.read.parquet(streamDir.toString).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
+    val ev = Tables.events(spark, sfDir)
+      .select(col("user_id"), col("ts_ns"), col("event_id"), Q.cents(col("value")).as("value_c"))
+    val (early, late, _) = halves(ev, "ts_ns")
+    val src = watch(spark, replay(spark, "tws", Seq(early, late)), 1)
       .as[(Long, Long, Long, Long)]
     val out = src.groupByKey(_._1)
       .transformWithState(new TimelineProcessor, TimeMode.None(),
         OutputMode.Append(), Encoders.product[TimelineOut])
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProvider = spark.conf.getOption(providerKey)
-    // transformWithState requires the RocksDB store
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val shuffleKey = "spark.sql.shuffle.partitions"
-      val oldShuffle = spark.conf.get(shuffleKey)
-      spark.conf.set(shuffleKey, "8")
-      try {
-        val q = out.toDF()
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally spark.conf.set(shuffleKey, oldShuffle)
-    } finally oldProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
     // each batch emits the running row; the drained answer per user
     // is the one with the largest n (monotone)
-    spark.table(name)
+    drain(spark, "tws", sfDir, out.toDF(), "append", RocksDb8)
       .groupBy(col("user_id"))
       .agg(max_by(
         struct(col("n_events"), col("first_ns"), col("last_ns"),

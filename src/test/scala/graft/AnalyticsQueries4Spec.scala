@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.AnalyticsQueries4
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Semantics pins for the round-12 pack: island merging on a
   * hand-computable timeline, the exact EWMA rational, BFS hop
@@ -126,8 +127,31 @@ class AnalyticsQueries4Spec extends SparkSpec {
         .orderBy(col("user_id"))
         .collect().map(_.toString).toSeq
     }
-    val got = run("q193_stream_outer").collect().map(_.toString).toSeq
+    // count the drain's micro-batches: the listener bus delivers a
+    // run's progress events before its terminated event
+    val name = "graft_stream_outer_" + math.abs(sf001.hashCode).toString
+    val runs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val batches = new java.util.concurrent.atomic.AtomicInteger
+    val stopped = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (e.name == name) runs.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == name) batches.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (runs.contains(e.runId)) stopped.countDown()
+    }
+    spark.streams.addListener(listener)
+    val got = try run("q193_stream_outer").collect().map(_.toString).toSeq
+      finally {
+        stopped.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        spark.streams.removeListener(listener)
+      }
     assert(got == batch)
+    // one batch carries the real rows and the first sentinel drop, one
+    // the second sentinel drop; a drop written as several files would
+    // add batches
+    assert(stopped.getCount == 0 && batches.get == 2)
     // the outer part is real: at least one click has zero views
     val unmatched = run("q193_stream_outer")
       .filter(col("n_rows") > col("n_matched")).count()
