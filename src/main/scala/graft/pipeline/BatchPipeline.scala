@@ -5,8 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row,
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import scala.collection.mutable.ArrayBuffer
-
 /** The whole reference pipeline as ONE Spark DAG — the Spark-native
   * `batchProcessVideos.py` + `demoTalkNet.py main()` (SURVEY §3.1–3.2):
   *
@@ -93,14 +91,29 @@ object BatchPipeline {
   val ConfTh = 0.9
   val MinSceneLen = 11
 
-  /** One frame's faces that pass the conf gate (the reference's gate
-    * sits inside the detector call), as (det_idx, x1, y1, x2, y2, conf)
-    * with det_idx the face's index in the detector's output. */
-  def keptFaces(detector: FaceDetector, videoId: Long, frame: Int, content: Double,
-      confTh: Double = ConfTh): Seq[(Int, Double, Double, Double, Double, Double)] =
-    detector.detect(videoId, frame, content).zipWithIndex.collect {
-      case ((x1, y1, x2, y2, conf), i) if conf > confTh => (i, x1, y1, x2, y2, conf)
+  /** The conf gate (the reference's gate sits inside the detector
+    * call): `keep(i, face)` for each face of one frame with
+    * conf > confTh, i its index in the detector's output. */
+  private def gatedFaces(detector: FaceDetector, videoId: Long, frame: Int, content: Double,
+      confTh: Double = ConfTh)(keep: (Int, (Double, Double, Double, Double, Double)) => Unit): Unit = {
+    val it = detector.detect(videoId, frame, content).iterator
+    var i = 0
+    while (it.hasNext) {
+      val face = it.next()
+      if (face._5 > confTh) keep(i, face)
+      i += 1
     }
+  }
+
+  /** One frame's [[gatedFaces]] as (det_idx, x1, y1, x2, y2, conf). */
+  def keptFaces(detector: FaceDetector, videoId: Long, frame: Int, content: Double,
+      confTh: Double = ConfTh): Seq[(Int, Double, Double, Double, Double, Double)] = {
+    val out = Seq.newBuilder[(Int, Double, Double, Double, Double, Double)]
+    gatedFaces(detector, videoId, frame, content, confTh) { case (i, (x1, y1, x2, y2, conf)) =>
+      out += ((i, x1, y1, x2, y2, conf))
+    }
+    out.result()
+  }
 
   /** frames(video_id, frame, content) → detections with conf filter. */
   def detectFaces(spark: SparkSession, frames: DataFrame, detector: FaceDetector,
@@ -172,35 +185,45 @@ object BatchPipeline {
   final case class ScoredTrack(video_id: Long, scene_id: Long, track_id: Long,
       points: Seq[ScoredPoint], segments: Seq[SpeakingSegments.Segment])
 
+  /** A track's points as a view over the tracker's arrays and the
+    * scores: a [[ScoredPoint]] exists only when a reader asks for it
+    * (q44's segments never do). */
+  private final class ScoredPoints(t: Tracker.Track, scores: Array[Double])
+      extends IndexedSeq[ScoredPoint] with Serializable {
+    def length: Int = scores.length
+    def apply(j: Int): ScoredPoint =
+      ScoredPoint(t.f0 + j, t.x1(j), t.y1(j), t.x2(j), t.y2(j), scores(j))
+  }
+
   /** The per-video kernel: one video's (frame, content) rows sorted by
     * frame and its scenes [start, end) in order → its scored tracks.
-    * Only frames of scenes passing the MinSceneLen gate are detected;
-    * tracks are numbered across the video (`Tracker.trackVideo`), and
-    * each track's segments are one scan of its scores, so a segment
-    * never crosses a track or a scene cut. */
+    * Only frames of scenes passing the MinSceneLen gate are detected,
+    * their gated faces appended to one [[Tracker.Faces]] buffer, so a
+    * scene is a range of it; tracks are numbered across the video
+    * (`Tracker.trackVideo`), and each track's segments are one scan of
+    * its scores, so a segment never crosses a track or a scene cut. */
   def scoreVideo(videoId: Long, frames: Array[(Int, Double)], scenes: Seq[(Int, Int)],
       detector: FaceDetector, scorer: SpeakerScorer, threshold: Double,
       minFrames: Int): Iterator[ScoredTrack] = {
     val sceneArr = scenes.toArray
-    val perScene = Array.fill(sceneArr.length)(ArrayBuffer.empty[Tracker.Det])
+    val fs = new Tracker.Faces(frames.length)
+    val bounds = new Array[Int](sceneArr.length + 1) // scene s: faces bounds(s) until bounds(s + 1)
     var s = 0
-    frames.foreach { case (f, c) =>
-      while (s < sceneArr.length && sceneArr(s)._2 <= f) s += 1
+    var i = 0
+    while (i < frames.length) {
+      val f = frames(i)._1
+      while (s < sceneArr.length && sceneArr(s)._2 <= f) { s += 1; bounds(s) = fs.length }
       if (s < sceneArr.length && sceneArr(s)._1 <= f &&
           sceneArr(s)._2 - sceneArr(s)._1 >= MinSceneLen)
-        keptFaces(detector, videoId, f, c).foreach { case (_, x1, y1, x2, y2, _) =>
-          perScene(s) += Tracker.Det(f, x1, y1, x2, y2)
-        }
+        gatedFaces(detector, videoId, f, frames(i)._2) { (_, d) => fs.add(f, d._1, d._2, d._3, d._4) }
+      i += 1
     }
-    Tracker.trackVideo(perScene.indices.iterator.map(sid => sid.toLong -> perScene(sid).toSeq))
-      .map { case (sid, tid, trk) =>
-        val scores = trackScores(videoId, tid, trk.length, scorer)
-        val points = trk.indices.map { j =>
-          val d = trk(j)
-          ScoredPoint(d.frame, d.x1, d.y1, d.x2, d.y2, scores(j))
-        }
-        ScoredTrack(videoId, sid, tid, points,
-          SpeakingSegments.scan(trk.map(_.frame).toArray, scores, threshold, minFrames))
+    while (s < sceneArr.length) { s += 1; bounds(s) = fs.length }
+    Tracker.trackVideo(fs, Iterator.range(0, sceneArr.length).map(s => (s.toLong, bounds(s), bounds(s + 1))))
+      .map { case (sid, tid, t) =>
+        val scores = trackScores(videoId, tid, t.length, scorer)
+        ScoredTrack(videoId, sid, tid, new ScoredPoints(t, scores),
+          SpeakingSegments.scan(t.frames, scores, threshold, minFrames))
       }
   }
 

@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -9,7 +15,9 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * Design notes for 100 TB scale: these return plain parquet scans, so
   * Catalyst predicate pushdown / column pruning / partition pruning all
   * apply — callers `select`/`filter` and the scan narrows accordingly.
-  * Nothing is cached or collected here.
+  * Nothing is cached or collected here, and building a reader runs no
+  * Spark job: the events schema is read from one parquet footer on the
+  * driver ([[eventsSchema]]).
   *
   * `events.ts` has shipped as parquet TIMESTAMP(NANOS), which Spark 4
   * refuses to read by default (PARQUET_TYPE_ILLEGAL), and as
@@ -93,10 +101,32 @@ object Tables {
     * TIMESTAMP_NTZ, is declared TimestampType. That read
     * takes the stored micros as they are: no per-row time-zone
     * conversion, and `ts_ns` does not depend on the session time zone,
-    * as DuckDB's `epoch_ns` does not. */
-  private def eventsSchema(spark: SparkSession, sfDir: String): StructType = {
+    * as DuckDB's `epoch_ns` does not.
+    *
+    * The schema comes from one data file's footer, read on the driver
+    * and converted the way Spark's inference converts it (the session's
+    * parquet confs, a Spark row-metadata schema in the footer wins), so
+    * no schema-inference job runs per call. A directory's data file is
+    * its first by name that does not start with `_` or `.`; like
+    * inference without `mergeSchema`, the other files are assumed to
+    * agree with it. */
+  private[graft] def eventsSchema(spark: SparkSession, sfDir: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    StructType(spark.read.parquet(s"$sfDir/events.parquet").schema.map(f =>
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(s"$sfDir/events.parquet")
+    val fs = path.getFileSystem(conf)
+    val st = fs.getFileStatus(path)
+    val file = if (!st.isDirectory) st else fs.listStatus(path)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).headOption
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file in $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf).withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try reader.getFooter finally reader.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    // nullable, as a file source makes any schema, inferred or given
+    StructType(GraftBridge.asNullable(schema).map(f =>
       if (f.name == "ts" && f.dataType == TimestampNTZType) f.copy(dataType = TimestampType)
       else f))
   }

@@ -5,6 +5,7 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.storage.StorageLevel
 
 import StreamRun.{drain, replay, watch, writeDrop, Sentinel, StateParts8}
 
@@ -368,7 +369,9 @@ object EventStream {
     val q = watch(spark, streamDir, 1)
       .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         val prev = root.resolve(s"state_v${batchId - 1}")
-        val cur = compact(batch)
+        // `cur` feeds both the max_by union and the count join: cached,
+        // the batch's file is scanned and compacted once
+        val cur = compact(batch).persist(StorageLevel.MEMORY_AND_DISK)
         val merged =
           if (java.nio.file.Files.exists(prev)) {
             val old = spark.read.parquet(prev.toString)
@@ -389,8 +392,8 @@ object EventStream {
         // idempotence: the version is keyed by batchId — a replayed
         // batch rewrites state_v<id> from state_v<id-1>, never
         // double-applies
-        merged.write.mode("overwrite")
-          .parquet(root.resolve(s"state_v$batchId").toString)
+        try merged.write.mode("overwrite").parquet(root.resolve(s"state_v$batchId").toString)
+        finally cur.unpersist()
         lastVersion.getAndUpdate(v => math.max(v, batchId))
         ()
       }.start()

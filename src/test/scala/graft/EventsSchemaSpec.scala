@@ -1,7 +1,18 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.sources.Tables
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.GraftTestHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Pins the schema-adaptive events contract (the round-8 driver
   * regeneration changed `ts` from TIMESTAMP(NANOS) — an epoch-ns long
@@ -73,5 +84,72 @@ class EventsSchemaSpec extends SparkSpec {
       Seq("event_id", "ts_ns", "user_id", "event_type", "value", "props", "ts"))
     assert(real.schema("ts_ns").dataType.typeName == "long")
     assert(real.schema("ts").dataType.typeName == "timestamp")
+  }
+
+  /** A TIMESTAMP(NANOS) events file, written with parquet-mr as the
+    * older generator wrote it (Spark cannot write that type). */
+  private def nanosVintage(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_evnanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message schema { optional int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false));
+        |optional int64 user_id; optional binary event_type (STRING); optional double value; }""".stripMargin)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new Path(s"$dir/events.parquet"), new Configuration())).withType(schema).build()
+    val g = new SimpleGroupFactory(schema)
+    try Seq(1L -> 1700000000123456789L, 2L -> 1700000001000000000L).foreach { case (e, ns) =>
+      w.write(g.newGroup().append("event_id", e).append("ts", ns).append("user_id", 3L)
+        .append("event_type", "view").append("value", 1.5))
+    } finally w.close()
+    dir
+  }
+
+  /** A Spark-written events directory (part files, `_SUCCESS`, the row
+    * metadata schema in each footer), `ts` TIMESTAMP_NTZ. */
+  private def sparkVintage(): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_evspark").toString
+    Seq((1L, 1700000000123456L, 5L), (2L, 1700000001000000L, 6L)).toDF("event_id", "us", "user_id")
+      .select(col("event_id"), timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"),
+        col("user_id"), lit("click").as("event_type"))
+      .repartition(2).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  /** What inference gives, with `ts` declared as the events readers do. */
+  private def inferred(dir: String): StructType =
+    StructType(spark.read.parquet(s"$dir/events.parquet").schema.map(f =>
+      if (f.name == "ts" && f.dataType == TimestampNTZType) f.copy(dataType = TimestampType) else f))
+
+  test("the footer schema equals Spark's inferred schema on every vintage") {
+    val dirs = Seq("nanos" -> nanosVintage(), "spark dir" -> sparkVintage(), "sf0.001" -> sf001,
+      "sf0.01" -> java.nio.file.Paths.get(sf001).resolveSibling("sf0.01").toString)
+    dirs.foreach { case (name, dir) =>
+      val footer = Tables.eventsSchema(spark, dir) // sets nanosAsLong first
+      assert(footer === inferred(dir), name)
+    }
+    assert(Tables.eventsSchema(spark, dirs.head._2)("ts").dataType.typeName == "long")
+  }
+
+  test("Tables.events runs no Spark job") {
+    val dir = sparkVintage()
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      GraftTestHooks.drainListenerBus(spark.sparkContext)
+      jobs.set(0)
+      Seq(dir, sf001, nanosVintage()).foreach(d => Tables.events(spark, d).schema)
+      Tables.eventsStream(spark, sf001).schema
+      GraftTestHooks.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0)
+  }
+
+  test("a missing events path fails with an error that names it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_evmissing").toString
+    val err = intercept[Exception](Tables.events(spark, dir))
+    assert(err.getMessage.contains(s"$dir/events.parquet"), err.getMessage)
   }
 }
